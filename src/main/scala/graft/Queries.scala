@@ -1106,8 +1106,7 @@ object Queries {
           .select(cols.map(col): _*)
         val landing = scratchOnce("st5_landing", d)(Ingest.landCdc(hourB, _))
         val lake = scratch("st5_lake") + "/tbl"
-        if (!hourA.isEmpty)
-          TableWriter.mergeCommit(s, Ingest.toLakeRows(hourA), lake)
+        TableWriter.mergeCommit(s, Ingest.toLakeRows(hourA), lake)
         CdcStream.mergeStream(s, landing, lake, scratch("st5_ckpt"),
           maxFilesPerTrigger = halfFilesTrigger(landing),
           availableNow = true).awaitTermination()

@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Schemas
 
@@ -165,22 +165,35 @@ object TableWriter {
       .mode("overwrite").parquet(path)
 
   /** A disjunction of partition-column equalities for the distinct
-    * partitions present in `delta` — collected to the driver (tiny: one
-    * tuple per touched DAY; a CDC tick caps at 100 minute-files, so a
-    * handful of days at most) and pushed into the snapshot scan, where
+    * partitions present in `delta` ([[touchedPartitions]], collected to
+    * the driver: one tuple per touched DAY; a CDC tick caps at 100
+    * minute-files, so a handful of days at most) for a lake scan, where
     * Catalyst turns it into partition-directory pruning.
     */
-  def touchedPartitionsPredicate(delta: DataFrame): Option[Column] = {
-    val parts = delta.select(partitionCols.map(col): _*).distinct().collect()
-    if (parts.isEmpty) None
-    else Some(parts.map { r =>
-      partitionCols.zipWithIndex
+  def touchedPartitionsPredicate(delta: DataFrame): Option[Column] =
+    Some(touchedPartitions(delta)).filter(_.nonEmpty).map(partitionsPredicate)
+
+  private def partitionsPredicate(parts: Seq[Seq[String]]): Column =
+    parts.map { p =>
+      partitionCols.zip(p)
         // null-safe <=>: a null partition value (__HIVE_DEFAULT_PARTITION__)
         // must still select its existing versions, or merging silently
         // duplicates those keys
-        .map { case (c, i) => col(c) <=> lit(r.getString(i)) }
+        .map { case (c, v) => col(c) <=> lit(v) }
         .reduce(_ && _)
-    }.reduce(_ || _))
+    }.reduce(_ || _)
+
+  /** The distinct `partitionCols` values of `delta` in ONE shuffle-free
+    * job: every task dedups its own rows, the driver dedups the few
+    * collected tuples (one per touched day per task). A `distinct()`
+    * would plan a shuffle, which AQE runs as two jobs. Empty iff the
+    * delta has no rows. A null value stays null.
+    */
+  private def touchedPartitions(delta: DataFrame): Seq[Seq[String]] = {
+    val idx = partitionCols.indices
+    delta.select(partitionCols.map(col): _*).rdd
+      .mapPartitions(_.map(r => idx.map(r.getString)).toSet.iterator)
+      .collect().distinct.toSeq
   }
 
   /** The O(delta)-cost upsert commit — the scale path for the CDC loop.
@@ -188,30 +201,62 @@ object TableWriter {
     * The lake is partitioned by create_* which derive from `create_at`,
     * an IMMUTABLE component of the record key `id` (initial_load.py:
     * 124-153: id = account + create_at). Hence every existing version of
-    * a delta key lives in a partition the delta itself names — pruning
-    * the snapshot to the delta's partitions loses nothing, and the merge
+    * a delta key lives in a partition the delta itself names — reading
+    * only the delta's partition directories loses nothing, and the merge
     * is exact while doing O(touched partitions) work per commit instead
     * of O(table) (at 100 TB: a few GB read+rewritten per tick, not the
     * lake).
     *
-    * `localCheckpoint` materializes only that pruned merged slice before
-    * the dynamic overwrite replaces the files it was read from (Spark
-    * refuses a same-path read-write cycle otherwise); the checkpoint
-    * cost is O(delta partitions), not O(table).
+    * A commit into an existing lake is three Spark jobs. Job one is
+    * [[touchedPartitions]], a shuffle-free pass over the delta that also
+    * decides emptiness: an empty delta is a no-op that neither creates
+    * nor rewrites anything. Job two is the shuffle map stage of the
+    * single upsert window ([[graft.merge.Merge.upsert]]), reading the
+    * delta and the snapshot slice. The slice is read with the delta's
+    * own schema (no parquet schema-inference job; partition columns stay
+    * the zero-padded strings, see [[read]]) from exactly the touched
+    * partition directories that exist, under `basePath = path`. Their
+    * names come from Spark's own partition-path escaping, so a null
+    * value finds its `__HIVE_DEFAULT_PARTITION__` rows. Job three is the
+    * dynamic-overwrite write of the window's output. Because the slice
+    * takes the delta's schema, the delta must carry exactly the lake's
+    * columns ([[Ingest.toLakeRows]]): a lake column it lacked would be
+    * dropped from every rewritten partition.
+    *
+    * Writing straight from a plan that reads `path` is safe, with no
+    * copy of the slice first: dynamic partition overwrite does not
+    * delete partition directories before the job (only static mode
+    * does), task output goes to `path/.spark-staging-<job>`, and the
+    * touched partitions are swapped in only at job commit. By then the
+    * shuffle map stage — the only stage that reads the snapshot — has
+    * finished, and a retried reduce task re-reads shuffle output or,
+    * on fetch failure, the still-unswapped snapshot files.
     */
   def mergeCommit(spark: SparkSession, delta: DataFrame, path: String,
                   keyCol: String = "id", versionCol: String = "update_at"): Unit = {
-    if (!new java.io.File(path).exists()) {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.generatePartitionPath
+    val touched = touchedPartitions(delta)
+    if (touched.isEmpty) return
+    val lake = new Path(path)
+    // the path's own FileSystem, not java.io.File: a Hadoop URI
+    // (file:/, hdfs://, s3a://) never exists as a local file, and a
+    // wrong "absent" here would bulk-overwrite the whole lake
+    val fs = lake.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(lake)) {
       // bootstrap: the first delta IS the table — but it can still carry
       // several versions of one key, so it gets the same in-batch dedup
       // a merge would apply
       bulkWrite(Merge.dedupLatest(delta, keyCol, versionCol), path)
     } else {
-      touchedPartitionsPredicate(delta).foreach { pred =>
-        val snapshotSlice = read(spark, path).filter(pred)
-        val merged = Merge.upsert(snapshotSlice, delta, keyCol, versionCol)
-        upsertWrite(merged.localCheckpoint(), path)
-      }
+      val dirs = touched
+        .map(p => generatePartitionPath(partitionCols.zip(p).toMap, partitionCols, lake))
+        .filter(fs.exists)
+      val snapshotSlice =
+        if (dirs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), delta.schema)
+        else spark.read.schema(delta.schema).option("basePath", path)
+          .parquet(dirs.map(_.toString): _*)
+      upsertWrite(Merge.upsert(snapshotSlice, delta, keyCol, versionCol), path)
     }
   }
 
@@ -222,15 +267,16 @@ object TableWriter {
     * write would then create `create_day=8` BESIDE the existing
     * `create_day=08`, silently duplicating the partition's rows on read
     * (both dirs parse to the same logical value). Every TableWriter
-    * write path routes through this read, so the library is safe on any
-    * session, not just GraftSession.
+    * write path reads the lake through this pin — [[mergeCommit]] with
+    * the delta's schema, whose partition columns are strings — so the
+    * library is safe on any session, not just GraftSession.
     *
     * The pin is a USER-SPECIFIED SCHEMA, not a post-read rewrite: a
     * user schema disables partition type inference for that read, so
     * the directory string `08` survives as-is AND the `create_*`
-    * columns remain genuine partition columns — filters on them (the
-    * merge tick's touched-partitions predicate, compaction's day
-    * predicate) still prune at the directory level. A `withColumn`
+    * columns remain genuine partition columns — filters on them (a
+    * [[touchedPartitionsPredicate]], compaction's day predicate) still
+    * prune at the directory level. A `withColumn`
     * rewrite would have silently turned those O(delta) scans into
     * O(table) post-scan filters on inference-enabled sessions.
     */
@@ -302,16 +348,14 @@ object TableWriter {
       s"purgeKeys: $bad key(s) do not embed a ',create_at:<${Schemas.TsPattern}>' " +
         "suffix; refusing to purge (the derived partition predicate would be wrong)")
     val withParts = Ingest.withPartitionColumns(withTs)
-    touchedPartitionsPredicate(withParts).foreach { pred =>
-      val touched = withParts.select(partitionCols.map(col): _*).distinct()
-        .collect().map(r => partitionCols.indices.map(r.getString).toSeq)
-      val slice = read(spark, path).filter(pred)
+    val touched = touchedPartitions(withParts)
+    if (touched.nonEmpty) {
+      val slice = read(spark, path).filter(partitionsPredicate(touched))
       val kept = slice.join(
           broadcast(keys.select(col(keyCol).as("__k")).distinct()),
           slice(keyCol) === col("__k"), "left_anti")
         .localCheckpoint()
-      val surviving = kept.select(partitionCols.map(col): _*).distinct()
-        .collect().map(r => partitionCols.indices.map(r.getString).toSeq).toSet
+      val surviving = touchedPartitions(kept).toSet
       upsertWrite(kept, path)
       val fs = new org.apache.hadoop.fs.Path(path)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -10,11 +10,12 @@ import org.apache.spark.sql.functions._
   * precombine.field=update_at) plus the in-batch window dedup
   * (incremental.py:154-163).
   *
-  * Scale notes (100 TB): both dedupLatest and upsert are a single hash
+  * Scale notes (100 TB): dedupLatest and upsert are each a single hash
   * shuffle on the record key — Catalyst plans them as one Exchange +
-  * WindowExec. The in-batch dedup runs FIRST so the (small) delta is
-  * shrunk before the wide union with the snapshot, exactly like the
-  * reference's pre-upsert dedup. For repeated merges at scale, bucketing
+  * WindowExec. upsert does the reference's pre-upsert in-batch dedup
+  * inside its own window (one exchange over delta ∪ snapshot, not a
+  * delta shuffle followed by a union shuffle), so the delta is never
+  * shuffled twice. For repeated merges at scale, bucketing
   * the snapshot by `id` would make the merge shuffle-free on the
   * snapshot side; with AQE on, skewed keys are split automatically.
   */
@@ -58,6 +59,12 @@ object Merge {
     * precombine-then-upsert behavior where the incoming record replaces
     * the stored one on equal precombine values).
     *
+    * The delta's in-batch dedup is folded into the same window: ordering
+    * by (version desc, delta first, content tiebreak) picks exactly the
+    * row [[dedupLatest]]-then-union would (the delta's latest version,
+    * its content tiebreak among equal versions, and the delta over the
+    * snapshot on a tie), with one exchange instead of two.
+    *
     * Pure DataFrame -> DataFrame so the DuckDB oracle can check it, and
     * idempotent under replay: merging the same delta twice is a no-op
     * (T8 in SURVEY.md §2.9) — verified as a seeded property test in
@@ -69,13 +76,12 @@ object Merge {
       keyCol: String = "id",
       versionCol: String = "update_at"): DataFrame = {
     val cols = snapshot.columns.toIndexedSeq
-    val d = dedupLatest(delta.selectExpr(cols: _*), keyCol, versionCol)
-      .withColumn("__src", lit(0)) // 0 = delta: wins version ties
+    val d = delta.selectExpr(cols: _*).withColumn("__src", lit(0)) // 0 = delta: wins version ties
     val s = snapshot.withColumn("__src", lit(1))
-    val unioned = d.unionByName(s)
     val w = Window.partitionBy(col(keyCol))
-      .orderBy(col(versionCol).desc, col("__src").asc)
-    unioned.withColumn("__rn", row_number().over(w))
+      .orderBy(col(versionCol).desc, col("__src").asc, contentTiebreak(snapshot))
+    d.unionByName(s)
+      .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn", "__src")
   }

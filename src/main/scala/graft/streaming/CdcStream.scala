@@ -44,11 +44,10 @@ object CdcStream {
       .trigger(trig)
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          // Partition-pruned merge: O(touched partitions) per tick, not
-          // O(table) — see TableWriter.mergeCommit.
-          TableWriter.mergeCommit(spark, Ingest.toLakeRows(batch), lakePath)
-        }
+        // Partition-pruned merge: O(touched partitions) per tick, not
+        // O(table), in three Spark jobs. An empty batch is a no-op that
+        // its first job detects — see TableWriter.mergeCommit.
+        TableWriter.mergeCommit(spark, Ingest.toLakeRows(batch), lakePath)
       }
       .start()
   }

@@ -1,7 +1,10 @@
 package graft.ingest
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -25,6 +28,46 @@ class MergeCommitSpec extends AnyFunSuite {
 
   private def day(d: Int, sec: Int) = f"2024-01-$d%02dT00:00:$sec%02d.000000+0000"
 
+  /** Every file under `p` with its modification time. */
+  private def filesOf(p: java.nio.file.Path): Map[String, Long] = {
+    import scala.jdk.CollectionConverters._
+    val w = Files.walk(p)
+    try w.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(f => f.toString -> Files.getLastModifiedTime(f).toMillis).toMap
+    finally w.close()
+  }
+
+  /** Spark jobs started by `body`, counted by job group. The listener
+    * bus is asynchronous, so a marker job run afterwards fences the
+    * count: once its start event arrives, every earlier job's has too.
+    */
+  private def jobsFiredBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"merge-commit-${java.util.UUID.randomUUID()}"
+    val fence = s"$group-fence"
+    val jobs = new AtomicInteger
+    val fenced = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`fence`) => fenced.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.setJobGroup(fence, "listener fence")
+      sc.parallelize(Seq(1), 1).count()
+      assert(fenced.await(60, TimeUnit.SECONDS), "listener fence job never arrived")
+      jobs.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("mergeCommit rewrites only delta partitions and matches full upsert") {
     val lake = Files.createTempDirectory("graft_lake").toString
     val snapshot = lakeRows(Seq(
@@ -33,13 +76,6 @@ class MergeCommitSpec extends AnyFunSuite {
     TableWriter.bulkWrite(snapshot, lake)
 
     val untouchedDir = Paths.get(lake, "create_year=2024", "create_month=01", "create_day=03")
-    def filesOf(p: java.nio.file.Path): Map[String, Long] = {
-      import scala.jdk.CollectionConverters._
-      val w = Files.walk(p)
-      try w.iterator().asScala.filter(Files.isRegularFile(_))
-        .map(f => f.toString -> Files.getLastModifiedTime(f).toMillis).toMap
-      finally w.close()
-    }
     val before = filesOf(untouchedDir)
 
     // delta updates k1 (same day-1 partition, newer version) + inserts k5 into day 2
@@ -64,6 +100,69 @@ class MergeCommitSpec extends AnyFunSuite {
     val delta = lakeRows(Seq(("k1", day(1, 1), "a"), ("k2", day(2, 1), "b")))
     TableWriter.mergeCommit(spark, delta, lake)
     assert(TableWriter.read(spark, lake).count() === 2)
+  }
+
+  test("mergeCommit into a file: URI lake keeps untouched partitions") {
+    // a Hadoop URI is not a local file path: a local-file existence
+    // check sees no lake on every tick, and each tick's bootstrap then
+    // bulk-overwrites the whole table with its delta
+    val lake = Files.createTempDirectory("graft_lake_uri").resolve("tbl").toUri.toString
+    assert(lake.startsWith("file:"))
+    TableWriter.mergeCommit(spark,
+      lakeRows(Seq(("k1", day(1, 1), "a"), ("k2", day(2, 1), "b"))), lake)
+    TableWriter.mergeCommit(spark,
+      lakeRows(Seq(("k2", day(2, 1), "b2"), ("k3", day(3, 1), "c")))
+        .withColumn("update_at", lit(day(9, 0))), lake)
+    val got = TableWriter.read(spark, lake).select("id", "note").collect()
+      .map(r => r.getString(0) -> r.getString(1)).sorted
+    assert(got.toSeq === Seq("k1" -> "a", "k2" -> "b2", "k3" -> "c"))
+  }
+
+  test("an empty delta is a no-op: no lake is created, an existing one keeps its files") {
+    val base = Files.createTempDirectory("graft_lake_nodelta")
+    val absent = base.resolve("tbl")
+    TableWriter.mergeCommit(spark, lakeRows(Seq.empty), absent.toString)
+    assert(Files.notExists(absent), "an empty delta must not create a lake directory")
+
+    val lake = base.resolve("lake")
+    TableWriter.bulkWrite(lakeRows(Seq(("k1", day(1, 1), "a"), ("k2", day(2, 1), "b"))),
+      lake.toString)
+    val before = filesOf(lake)
+    TableWriter.mergeCommit(spark, lakeRows(Seq.empty), lake.toString)
+    assert(filesOf(lake) === before, "an empty delta must leave every lake file as it was")
+  }
+
+  test("a commit into an existing lake fires at most 3 Spark jobs; an empty delta at most 1") {
+    assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")
+    val lake = Files.createTempDirectory("graft_lake_jobs").toString
+    TableWriter.bulkWrite(lakeRows(Seq(
+      ("k1", day(1, 1), "a"), ("k2", day(2, 1), "b"), ("k3", day(3, 1), "c"))), lake)
+    // an update in an existing day, a duplicate key inside the delta,
+    // and an insert into a new day
+    val delta = lakeRows(Seq(
+      ("k1", day(1, 1), "a2"), ("k1", day(1, 1), "a3"), ("k9", day(4, 1), "new")))
+      .withColumn("update_at", lit(day(9, 0)))
+    val commitJobs = jobsFiredBy(TableWriter.mergeCommit(spark, delta, lake))
+    assert(commitJobs <= 3, s"mergeCommit into an existing lake fired $commitJobs jobs")
+    assert(TableWriter.read(spark, lake).count() === 4)
+    val emptyJobs = jobsFiredBy(TableWriter.mergeCommit(spark, lakeRows(Seq.empty), lake))
+    assert(emptyJobs <= 1, s"mergeCommit of an empty delta fired $emptyJobs jobs")
+  }
+
+  test("a null partition value merges into its __HIVE_DEFAULT_PARTITION__ rows") {
+    val lake = Files.createTempDirectory("graft_lake_nullpart").toString
+    TableWriter.bulkWrite(lakeRows(Seq(
+      ("n1", null, "a"), ("n2", null, "b"), ("k1", day(1, 1), "c")))
+      .withColumn("update_at", lit(day(1, 0))), lake)
+    assert(Files.isDirectory(Paths.get(lake, "create_year=__HIVE_DEFAULT_PARTITION__")))
+    TableWriter.mergeCommit(spark,
+      lakeRows(Seq(("n1", null, "a2"))).withColumn("update_at", lit(day(5, 0))), lake)
+    // n2 shares the rewritten default partition: losing the existing
+    // slice of that partition would drop it, not just n1's old version
+    val got = TableWriter.read(spark, lake).select("id", "note", "update_at").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2))).sorted
+    assert(got.toSeq === Seq(
+      ("k1", "c", day(1, 0)), ("n1", "a2", day(5, 0)), ("n2", "b", day(1, 0))))
   }
 
   test("compactPartition shrinks one day's file count without changing data or neighbors") {
@@ -183,13 +282,6 @@ class MergeCommitSpec extends AnyFunSuite {
     val rows = Ingest.withPartitionColumns(Ingest.withId(flat))
     TableWriter.bulkWrite(rows, lake)
 
-    def filesOf(p: java.nio.file.Path): Map[String, Long] = {
-      import scala.jdk.CollectionConverters._
-      val w = Files.walk(p)
-      try w.iterator().asScala.filter(Files.isRegularFile(_))
-        .map(f => f.toString -> Files.getLastModifiedTime(f).toMillis).toMap
-      finally w.close()
-    }
     val d3 = Paths.get(lake, "create_year=2024", "create_month=01", "create_day=03")
     val before = filesOf(d3)
 
