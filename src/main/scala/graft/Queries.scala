@@ -522,7 +522,7 @@ object Queries {
         |SELECT *, 'lake_only' AS side FROM (SELECT * FROM lakep EXCEPT ALL SELECT * FROM src)
         |ORDER BY side, id""".stripMargin)),
 
-    // CMP1: classified snapshot diff — j2's exceptAll says WHETHER the
+    // CMP1: classified snapshot diff — j2's compare says WHETHER the
     // lake drifted; this labels every key added / removed / changed /
     // unchanged. The stale lake drops keys whose latest landed after
     // day 28 (-> added), perturbs amounts for days <= 25 (-> changed),
@@ -1015,11 +1015,12 @@ object Queries {
           .select("account", "create_at", "update_at", "entity", "amount", "is_credit", "note"))
         val dirOut = scratch("k1_lake")
         TableWriter.bulkWrite(lake, dirOut, codec = "zstd")
-        // partition values read back as ints (directory-type inference),
-        // so the pruning filter is numeric; output day re-derives from
-        // create_at to stay a zero-padded string for the oracle
+        // partition values read back as the zero-padded strings they
+        // were written as (TableWriter.read's fixed schema), so the
+        // pruning filter compares strings; output day re-derives from
+        // create_at, the same string
         TableWriter.read(s, dirOut)
-          .filter(col("create_day") <= 5)
+          .filter(col("create_day") <= "05")
           .groupBy(substring(col("create_at"), 9, 2).as("day"))
           .agg(count(lit(1)).cast("long").as("n"), sum(col("amount")).cast("long").as("amt"))
           .orderBy("day")

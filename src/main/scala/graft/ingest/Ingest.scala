@@ -260,41 +260,32 @@ object TableWriter {
     }
   }
 
-  /** Read the lake with partition columns pinned to their canonical
+  /** Read the lake with its fixed row schema, [[Schemas.lakeRow]]: one
+    * scan job, with no parquet schema-inference job before it. A lake
+    * file that lacks one of its columns reads it as null; a column
+    * outside it is not read.
+    *
+    * The schema also pins the partition columns to their canonical
     * zero-padded STRING form. A session with partition type inference
-    * enabled (the Spark default; GraftSession disables it) reads
+    * enabled (the Spark default; GraftSession disables it) would read
     * `create_day=08` back as int 8 — and a subsequent dynamic-overwrite
     * write would then create `create_day=8` BESIDE the existing
     * `create_day=08`, silently duplicating the partition's rows on read
     * (both dirs parse to the same logical value). Every TableWriter
-    * write path reads the lake through this pin — [[mergeCommit]] with
-    * the delta's schema, whose partition columns are strings — so the
-    * library is safe on any session, not just GraftSession.
+    * write path reads the lake with string partition columns — this
+    * read, or [[mergeCommit]]'s slice read with the delta's schema — so
+    * the library is safe on any session, not just GraftSession.
     *
-    * The pin is a USER-SPECIFIED SCHEMA, not a post-read rewrite: a
-    * user schema disables partition type inference for that read, so
-    * the directory string `08` survives as-is AND the `create_*`
-    * columns remain genuine partition columns — filters on them (a
-    * [[touchedPartitionsPredicate]], compaction's day predicate) still
-    * prune at the directory level. A `withColumn`
-    * rewrite would have silently turned those O(delta) scans into
-    * O(table) post-scan filters on inference-enabled sessions.
+    * A user-specified schema disables partition type inference for that
+    * read, so the directory string `08` survives as-is AND the
+    * `create_*` columns remain genuine partition columns — filters on
+    * them (a [[touchedPartitionsPredicate]], compaction's day predicate)
+    * still prune at the directory level. A `withColumn` rewrite would
+    * have silently turned those O(delta) scans into O(table) post-scan
+    * filters on inference-enabled sessions.
     */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val first = spark.read.parquet(path)
-    if (partitionCols.forall(c =>
-        first.schema(c).dataType == org.apache.spark.sql.types.StringType)) first
-    else {
-      // schema-only pass above (footer + dir listing); re-read with the
-      // partition columns forced to string
-      val pinned = org.apache.spark.sql.types.StructType(first.schema.map { f =>
-        if (partitionCols.contains(f.name))
-          f.copy(dataType = org.apache.spark.sql.types.StringType)
-        else f
-      })
-      spark.read.schema(pinned).parquet(path)
-    }
-  }
+  def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(Schemas.lakeRow).parquet(path)
 
   /** Small-file compaction for one day partition: every 10 s merge tick
     * adds a few files to each touched day, so a hot partition
@@ -342,8 +333,7 @@ object TableWriter {
     // extraction matches nothing and the RTBF purge would silently
     // delete nothing — a silent compliance failure. Purge sets are
     // small (a user's keys), so this extra pass is cheap.
-    val bad = withTs.filter(!col("create_at").rlike(
-      "^\\d{4}-\\d{2}-\\d{2}T\\d{2}:\\d{2}:\\d{2}\\.\\d{6}[+-]\\d{4}$")).count()
+    val bad = withTs.filter(!col("create_at").rlike(Schemas.TsRegex)).count()
     require(bad == 0,
       s"purgeKeys: $bad key(s) do not embed a ',create_at:<${Schemas.TsPattern}>' " +
         "suffix; refusing to purge (the derived partition predicate would be wrong)")

@@ -59,6 +59,11 @@ object Schemas {
   /** The timestamp wire format: `2023-07-27T22:14:26.066612+0000`. */
   val TsPattern = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSZ"
 
+  /** [[TsPattern]] as a whole-string regex, for checks that must not
+    * parse: 6 fractional digits and a signed 4-digit offset.
+    */
+  val TsRegex = "^\\d{4}-\\d{2}-\\d{2}T\\d{2}:\\d{2}:\\d{2}\\.\\d{6}[+-]\\d{4}$"
+
   private def s(name: String) =
     StructField(name, StructType(Seq(StructField("S", StringType))))
   private def n(name: String) =
@@ -90,6 +95,16 @@ object Schemas {
     */
   lazy val lakeFlat: StructType =
     StructType(StructField("id", StringType) +: flatCdcRow.fields)
+
+  /** The lake's full row: [[lakeFlat]] plus the five `create_*`
+    * partition columns, as the zero-padded strings they are written as
+    * (`Ingest.withPartitionColumns`). Reading the lake with this schema
+    * needs no schema-inference job, and a user schema turns off
+    * partition type inference, so `create_day=08` stays `"08"`.
+    */
+  lazy val lakeRow: StructType = StructType(lakeFlat.fields ++
+    Seq("create_year", "create_month", "create_day", "create_hour", "create_minute")
+      .map(StructField(_, StringType)))
 
   /** Flat CDC row landed as JSON-lines (README.rst:198-205). */
   val flatCdcRow: StructType = StructType(Seq(

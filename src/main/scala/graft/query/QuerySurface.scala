@@ -32,12 +32,44 @@ object QuerySurface {
     df.filter(col(keyCol) === key).orderBy(col(rangeCol).desc).limit(k)
 
   /** The compare() oracle (compare.py:50-79 = J2): source-of-truth vs
-    * lake readback. The reference sorts both sides and zips row-by-row;
-    * distributed-first this is two anti-semijoins — no driver collect,
-    * no global sort. Returns (rows only in left, rows only in right).
+    * lake readback. Returns (rows only in source, rows only in lake) as
+    * multisets: exactly `(source.exceptAll(lake), lake.exceptAll(source))`,
+    * computed with ONE exchange instead of two. The reference sorts both
+    * sides and zips row-by-row; here there is no driver collect and no
+    * global sort.
+    *
+    * Both sides are unioned by position (union type widening, left-side
+    * names), each row tagged +1 (source) or -1 (lake), grouped by every
+    * column, and the tags summed: a row's sum is its source count minus
+    * its lake count. That is the aggregate Spark's `RewriteExceptAll`
+    * builds for each `exceptAll` direction, so the semantics are the
+    * same — NULL groups with NULL, NaN and -0.0 are normalised, and the
+    * rows are compared exactly, never through a hash. A positive sum is
+    * a source-only row repeated that many times, a negative one a
+    * lake-only row.
+    *
+    * This is an ACTION: the non-zero sums are materialised once with an
+    * eager `localCheckpoint` (zero rows when the lake is right), and both
+    * returned sides are a filter and a replicate over that checkpoint, so
+    * using them scans neither input again. The lake-only side carries the
+    * lake's column names, as `lake.exceptAll(source)` would.
     */
-  def compare(source: DataFrame, lake: DataFrame): (DataFrame, DataFrame) =
-    (source.exceptAll(lake), lake.exceptAll(source))
+  def compare(source: DataFrame, lake: DataFrame): (DataFrame, DataFrame) = {
+    // positional internal names: user column names, duplicates and dots
+    // included, never meet the tag or count columns
+    val cols = source.columns.indices.map(i => s"c$i")
+    def tagged(df: DataFrame, tag: Long) =
+      df.toDF(cols: _*).withColumn("tag", lit(tag))
+    val diff = tagged(source, 1L).union(tagged(lake, -1L))
+      .groupBy(cols.map(col): _*).agg(sum(col("tag")).as("n"))
+      .filter(col("n") =!= 0)
+      .localCheckpoint()
+    def side(sign: Long, names: Seq[String]) =
+      diff.filter(col("n") * sign > 0)
+        .withColumn("n", explode(array_repeat(lit(true), (col("n") * sign).cast("int"))))
+        .select(cols.map(col): _*).toDF(names: _*)
+    (side(1L, source.columns.toSeq), side(-1L, lake.columns.toSeq))
+  }
 
   /** Convenience: true iff both relations are multiset-equal. */
   def isEqual(source: DataFrame, lake: DataFrame): Boolean = {
@@ -59,9 +91,10 @@ object QuerySurface {
   /** Classified snapshot diff: one row per key, labeled added /
     * removed / changed / unchanged, by full-outer-joining the two
     * keyed snapshots and comparing a content hash. The reconciliation
-    * REPORT form of [[compare]]: exceptAll says WHETHER the lake
-    * drifted, this says per key WHERE and HOW. Both inputs must be
-    * unique per key (snapshot shape, e.g. Merge.dedupLatest output).
+    * REPORT form of [[compare]]: compare says WHETHER the lake drifted
+    * (and by which whole rows), this says per key WHERE and HOW. Both
+    * inputs must be unique per key (snapshot shape, e.g.
+    * Merge.dedupLatest output).
     *
     * Scale: each side's payload collapses to one 128-bit hash BEFORE
     * the join, so only (key, hash) pairs cross the exchange — never
@@ -92,10 +125,12 @@ object QuerySurface {
   */
 object SqlSurface {
 
-  /** Register a lake path under a view name (the "database.table"). */
+  /** Register a lake path under a view name (the "database.table"),
+    * read like every other lake read ([[graft.ingest.TableWriter.read]]).
+    */
   def registerLake(spark: org.apache.spark.sql.SparkSession, path: String,
                    view: String = "transactions"): Unit =
-    spark.read.parquet(path).createOrReplaceTempView(view)
+    graft.ingest.TableWriter.read(spark, path).createOrReplaceTempView(view)
 
   /** `run_athena_query` analog: SQL in, DataFrame out. */
   def query(spark: org.apache.spark.sql.SparkSession, sql: String): DataFrame =

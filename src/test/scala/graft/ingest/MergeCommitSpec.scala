@@ -1,14 +1,12 @@
 package graft.ingest
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkJobs.jobsFiredBy
 import graft.TestSpark
 import graft.merge.Merge
 
@@ -35,37 +33,6 @@ class MergeCommitSpec extends AnyFunSuite {
     try w.iterator().asScala.filter(Files.isRegularFile(_))
       .map(f => f.toString -> Files.getLastModifiedTime(f).toMillis).toMap
     finally w.close()
-  }
-
-  /** Spark jobs started by `body`, counted by job group. The listener
-    * bus is asynchronous, so a marker job run afterwards fences the
-    * count: once its start event arrives, every earlier job's has too.
-    */
-  private def jobsFiredBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"merge-commit-${java.util.UUID.randomUUID()}"
-    val fence = s"$group-fence"
-    val jobs = new AtomicInteger
-    val fenced = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(`fence`) => fenced.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      try body finally sc.setJobGroup(fence, "listener fence")
-      sc.parallelize(Seq(1), 1).count()
-      assert(fenced.await(60, TimeUnit.SECONDS), "listener fence job never arrived")
-      jobs.get
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
   }
 
   test("mergeCommit rewrites only delta partitions and matches full upsert") {
@@ -163,6 +130,19 @@ class MergeCommitSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getString(1), r.getString(2))).sorted
     assert(got.toSeq === Seq(
       ("k1", "c", day(1, 0)), ("n1", "a2", day(5, 0)), ("n2", "b", day(1, 0))))
+  }
+
+  test("read takes the fixed lake schema; a column a lake file lacks reads as null") {
+    // the fixtures here write only id/create_at/note/update_at + partitions
+    val lake = Files.createTempDirectory("graft_lake_schema").toString
+    TableWriter.bulkWrite(lakeRows(Seq(("k1", day(8, 1), "a"))), lake)
+    val got = TableWriter.read(spark, lake)
+    // partition columns come last, as in any partitioned parquet read
+    assert(got.schema.sortBy(_.name) === graft.model.Schemas.lakeRow.sortBy(_.name))
+    val r = got.head()
+    assert(r.getAs[String]("create_day") === "08", "partition values stay zero-padded strings")
+    assert(r.getAs[String]("note") === "a")
+    assert(r.isNullAt(r.fieldIndex("account")) && r.isNullAt(r.fieldIndex("amount")))
   }
 
   test("compactPartition shrinks one day's file count without changing data or neighbors") {
