@@ -95,42 +95,32 @@ object Ingest {
     * exact). The reference leans on S3 lifecycle rules for this; an
     * explicit idempotent cleanup keeps the transient landing zone from
     * accumulating minute-dirs forever. Driver-side listing is O(dirs) —
-    * the same order of work as the tracker's own partition listing.
+    * the same order of work as the tracker's own partition listing —
+    * through `dir`'s Hadoop `FileSystem` under the active session's
+    * Hadoop configuration, so `dir` may be a plain path or any Hadoop
+    * URI. Directories emptied by the prune go too, never `dir` itself.
     * Returns the number of minute partitions removed.
     */
   def pruneLanding(dir: String, throughPartition: String): Int = {
-    import java.nio.file.{Files, Path, Paths}
-    import java.util.Comparator
-    import scala.jdk.CollectionConverters._
-    val root = Paths.get(dir)
-    if (!Files.exists(root)) return 0
-    val doomed = {
-      val s = Files.walk(root, 5)
-      try s.iterator().asScala
-        .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith("minute=")
-          && root.relativize(p).toString <= throughPartition)
-        .toVector
-      finally s.close()
-    }
-    doomed.foreach { p =>
-      val s = Files.walk(p)
-      try s.sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
-      finally s.close()
-    }
-    // sweep now-empty parent dirs (hour/day/month/year) bottom-up
-    val all = {
-      val s = Files.walk(root)
-      try s.sorted(Comparator.reverseOrder[Path]()).iterator().asScala.toVector
-      finally s.close()
-    }
-    all.foreach { p =>
-      if (p != root && Files.isDirectory(p)) {
-        val ls = Files.list(p)
-        val empty = try !ls.iterator().hasNext finally ls.close()
-        if (empty) Files.delete(p)
+    import org.apache.hadoop.fs.Path
+    val root = new Path(dir)
+    val fs = root.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
+    if (!fs.exists(root)) return 0
+    // deletes the absorbed minute dirs under `d`, then `d` itself once
+    // nothing is left in it (never the root); returns the minute dirs
+    // removed and whether `d` is gone
+    def prune(d: Path, rel: String): (Int, Boolean) = {
+      val children = fs.listStatus(d)
+      val pruned = children.filter(_.isDirectory).map { c =>
+        val name = c.getPath.getName
+        val cRel = if (rel.isEmpty) name else s"$rel/$name"
+        if (name.startsWith("minute=") && cRel <= throughPartition) (1, fs.delete(c.getPath, true))
+        else prune(c.getPath, cRel)
       }
+      val gone = rel.nonEmpty && pruned.count(_._2) == children.length && fs.delete(d, true)
+      (pruned.map(_._1).sum, gone)
     }
-    doomed.size
+    prune(root, "")._1
   }
 }
 

@@ -1,6 +1,7 @@
 package graft.orchestrate
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
+import java.util.UUID
 
 /** JSON persistence for the tracker state machine and the per-tick job
   * input — the reference round-trips both through S3 documents
@@ -83,6 +84,22 @@ object Persist {
     }
   }
 
+  /** Writes the whole document or nothing, as the reference's S3 PUT
+    * does: the text goes to a temp file beside `path`, which then
+    * replaces `path` in one rename. A crash mid-write leaves the old
+    * document readable plus a stray temp file, which no reader looks at
+    * and the next write of the same document does not depend on.
+    */
+  private def replaceAtomically(path: String, text: String): Unit = {
+    val p = Paths.get(path).toAbsolutePath
+    Files.createDirectories(p.getParent)
+    val tmp = p.resolveSibling(s".${p.getFileName}.${UUID.randomUUID()}.tmp")
+    try {
+      Files.writeString(tmp, text, StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
+      Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    } finally Files.deleteIfExists(tmp)
+  }
+
   // -- CDCTracker.State <-> JSON (orchestration.py:141-154) ------------
 
   def stateToJson(s: CdcTracker.State): String = {
@@ -101,11 +118,8 @@ object Persist {
     lastRunId = strField(json, "last_run_id"),
     readyToRunNext = boolField(json, "ready_to_run_next").getOrElse(true))
 
-  def writeState(s: CdcTracker.State, path: String): Unit = {
-    val p = Paths.get(path)
-    Option(p.getParent).foreach(Files.createDirectories(_))
-    Files.writeString(p, stateToJson(s))
-  }
+  def writeState(s: CdcTracker.State, path: String): Unit =
+    replaceAtomically(path, stateToJson(s))
 
   def readState(path: String): Option[CdcTracker.State] = {
     val p = Paths.get(path)
@@ -131,11 +145,8 @@ object Persist {
       .getOrElse(throw new IllegalArgumentException("missing end_before_partition")),
     s3uriList = arrField(json, "s3uri_list").getOrElse(Seq.empty))
 
-  def writeJobInput(j: JobInput, path: String): Unit = {
-    val p = Paths.get(path)
-    Option(p.getParent).foreach(Files.createDirectories(_))
-    Files.writeString(p, jobInputToJson(j))
-  }
+  def writeJobInput(j: JobInput, path: String): Unit =
+    replaceAtomically(path, jobInputToJson(j))
 
   def readJobInput(path: String): JobInput =
     jobInputFromJson(Files.readString(Paths.get(path)))

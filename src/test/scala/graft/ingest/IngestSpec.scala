@@ -82,4 +82,29 @@ class IngestSpec extends AnyFunSuite {
         === Set("a", "c"))
     } finally spark.catalog.clearCache()
   }
+
+  test("pruneLanding takes a file: URI landing dir and prunes through the cursor") {
+    val root = Files.createTempDirectory("graft_prune")
+    val minutes = (0 to 3).map(m => f"year=2024/month=01/day=01/hour=00/minute=$m%02d") :+
+      "year=2024/month=01/day=01/hour=01/minute=00"
+    minutes.foreach { m =>
+      Files.createDirectories(root.resolve(m))
+      Files.writeString(root.resolve(m).resolve("part-0.json"), "{}")
+    }
+    val uri = root.toUri.toString
+    assert(uri.startsWith("file:/"))
+    val cursor = "year=2024/month=01/day=01/hour=00/minute=01"
+    assert(Ingest.pruneLanding(uri, cursor) === 2)
+    minutes.foreach { m =>
+      assert(Files.exists(root.resolve(m)) === (m > cursor), m)
+    }
+    // emptied parents go with their last minute, never the root itself
+    assert(Ingest.pruneLanding(uri, "year=2024/month=01/day=01/hour=00/minute=59") === 2)
+    assert(!Files.exists(root.resolve("year=2024/month=01/day=01/hour=00")))
+    assert(Files.exists(root.resolve("year=2024/month=01/day=01/hour=01/minute=00")))
+    assert(Ingest.pruneLanding(uri, "year=2024/month=01/day=01/hour=01/minute=00") === 1)
+    assert(Files.exists(root) && root.toFile.list().isEmpty)
+    assert(Ingest.pruneLanding(uri, cursor) === 0)
+    assert(Ingest.pruneLanding(root.resolve("absent").toUri.toString, cursor) === 0)
+  }
 }

@@ -1,9 +1,10 @@
 package graft.orchestrate
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 class PersistSpec extends AnyFunSuite {
@@ -54,5 +55,40 @@ class PersistSpec extends AnyFunSuite {
   test("state round-trips strings with backslash escapes and control chars") {
     val s = CdcTracker.State("p\\n1", Some("x\"y"), Some("run\t9"), readyToRunNext = true)
     assert(stateFromJson(stateToJson(s)) === s)
+  }
+
+  test("a document is replaced by rename, never rewritten in place; a crashed write's temp file changes nothing") {
+    val s1 = CdcTracker.State("year=2024/month=01/day=01/hour=00/minute=00", None, Some("run-1"),
+      readyToRunNext = true)
+    val p = tmp("state.json")
+    writeState(s1, p)
+    val dir = Paths.get(p).getParent
+    def names() = {
+      val ls = Files.list(dir)
+      try ls.iterator().asScala.map(_.getFileName.toString).toSet finally ls.close()
+    }
+    assert(names() === Set("state.json"))
+    // a write cut off after its first bytes, as a crash would leave it
+    val torn = stateToJson(s1.copy(lastProcessedPartition = "year=2024/month=01/day=01/hour=00/minute=05"))
+    Files.writeString(dir.resolve(".state.json.crashed.tmp"), torn.take(20))
+    assert(readState(p) === Some(s1))
+    // a second name for the document's current file: rewriting that
+    // file in place (what a crash can tear) would show through it
+    val old = dir.resolve("old.json")
+    Files.createLink(old, Paths.get(p))
+    val s2 = s1.copy(lastProcessedPartition = "year=2024/month=01/day=01/hour=00/minute=09")
+    writeState(s2, p)
+    assert(readState(p) === Some(s2))
+    assert(stateFromJson(Files.readString(old)) === s1, "the document was rewritten in place")
+    assert(names() === Set("state.json", ".state.json.crashed.tmp", "old.json"))
+
+    val in = tmp("input.json")
+    writeJobInput(JobInput("a", "b", Seq("s3://b/f1.json")), in)
+    writeJobInput(JobInput("a", "c", Seq.empty), in)
+    assert(readJobInput(in) === JobInput("a", "c", Seq.empty))
+    val inDir = Paths.get(in).getParent
+    val ls = Files.list(inDir)
+    try assert(ls.iterator().asScala.map(_.getFileName.toString).toSet === Set("input.json"))
+    finally ls.close()
   }
 }
