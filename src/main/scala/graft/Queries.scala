@@ -3,13 +3,13 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import scala.jdk.CollectionConverters._
 
 import graft.codec.DynamoDbJson
-import graft.ingest.{HashBucketLake, Ingest, TableWriter}
+import graft.ingest.{Ingest, TableWriter}
 import graft.merge.Merge
 import graft.model.Schemas
 import graft.orchestrate.CdcTracker
@@ -152,21 +152,10 @@ object Queries {
     p.toString
   }
 
-  /** Produce a deterministic SOURCE dir (a streaming query's landing /
-    * upstream feed) ONCE per process per (name, sf dir): the producer
-    * side of a streaming query simulates the upstream system (DynamoDB
-    * stream consumer, export drop) — it is test scaffolding, not the
-    * operator under measurement, and its bytes are identical on every
-    * repetition. Bench's warm + 2 timed runs therefore re-measure only
-    * the engine's own consumption path. Consumer-side state
-    * (checkpoints, lakes, sinks) still goes through plain [[scratch]]
-    * and is wiped per invocation, so every timed run replays the full
-    * streaming machinery from a clean slate.
-    */
   /** Run a streaming drain with `spark.sql.shuffle.partitions` scoped
     * down to `parts`. A stateful streaming query instantiates (and
     * commits, per micro-batch) one state-store partition PER shuffle
-    * partition PER stateful operator — at the bench's KB-scale state,
+    * partition PER stateful operator — at the test tables' KB-scale state,
     * the session's 32 partitions are pure fixed overhead (hundreds of
     * near-empty delta-file commits per drain), and AQE cannot help
     * because stateful plans pin their partitioning at first start.
@@ -174,7 +163,7 @@ object Queries {
     * standard production knob for exactly this reason: at 100 TB you
     * set it per streaming job to O(cores × a few), here the state is
     * KB so 4 is already generous. Batch queries are unaffected — the
-    * previous value is restored on exit (bench/verify run queries
+    * previous value is restored on exit (Verify runs queries
     * sequentially, so the scoped write cannot race another query).
     */
   private[graft] def withStreamShuffle[T](s: SparkSession, parts: Int = 4)(
@@ -203,14 +192,25 @@ object Queries {
     math.max(1, (n + 1) / 2)
   }
 
+  /** Produce a deterministic SOURCE dir (a streaming query's landing /
+    * upstream feed) ONCE per process per (name, sf dir): the producer
+    * side of a streaming query simulates the upstream system (DynamoDB
+    * stream consumer, export drop) — it is test scaffolding, not the
+    * operator under measurement, and its bytes are identical on every
+    * repetition, so a repeated run re-measures only the engine's own
+    * consumption path. Consumer-side state
+    * (checkpoints, lakes, sinks) still goes through plain [[scratch]]
+    * and is wiped per invocation, so every timed run replays the full
+    * streaming machinery from a clean slate.
+    */
   private val scratchOnceMemo =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[graft] def scratchOnce(name: String, sfDir: String)(
       produce: String => Unit): String =
     scratchOnceMemo.computeIfAbsent(s"$name@$sfDir", { _ =>
       // the sfDir tag is part of the PHYSICAL path, not just the memo
-      // key: one process touching two data dirs (BenchScale's base +
-      // scaled corpora) must land each (name, dir) pair in its own
+      // key: one process touching two data dirs (sf0.001 and sf0.01)
+      // must land each (name, dir) pair in its own
       // directory, or the second dir's produce() would rewrite the
       // directory the first memo entry still points at.
       val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
@@ -275,133 +275,10 @@ object Queries {
     |       $PartitionSelect
     |FROM tx ORDER BY id""".stripMargin
 
-  /** Shared oracle for mv1/mv2: full recompute of the per-account
-    * aggregate over the tombstone-upserted state (j4 semantics) — a
-    * hash match proves the maintained view ≡ recompute, whether the
-    * maintenance ran in one batch (mv1) or across stream ticks (mv2).
-    */
-  private val MvAggSql: String = s"""$TxCte$KeyedCte,
-    |snap AS (SELECT * EXCLUDE rn FROM (
-    |  SELECT *, row_number() OVER (PARTITION BY id ORDER BY update_at DESC, event_id DESC) AS rn
-    |  FROM keyed WHERE event_id % 2 = 0) WHERE rn = 1),
-    |delt0 AS (SELECT *, CASE WHEN entity = 'error' THEN 1 ELSE 0 END AS del
-    |  FROM keyed WHERE event_id % 2 = 1),
-    |delt AS (SELECT * EXCLUDE rn FROM (
-    |  SELECT *, row_number() OVER (PARTITION BY id ORDER BY update_at DESC, del DESC, event_id DESC) AS rn
-    |  FROM delt0) WHERE rn = 1),
-    |u AS (SELECT * FROM delt UNION ALL SELECT *, 0 AS del FROM snap),
-    |m AS (SELECT * FROM (
-    |  SELECT *, row_number() OVER (PARTITION BY id ORDER BY update_at DESC, del DESC, event_id DESC) AS rn
-    |  FROM u) WHERE rn = 1 AND del = 0)
-    |SELECT account, CAST(count(*) AS BIGINT) AS n_rows,
-    |  CAST(sum(CAST(amount AS DECIMAL(18,2))) AS DOUBLE) AS total
-    |FROM m GROUP BY account ORDER BY account""".stripMargin
-
   /** All registered queries. Names carry the SURVEY §2 operator ids. */
   val cdc: Seq[(String, Q)] = Seq(
 
     "j1_flagship_upsert" -> Q(flagshipUpsert, Some(flagshipSql)),
-
-    // T7 tombstone mode under the gate: same snapshot/delta split as
-    // j1, but delta rows with entity 'error' (the p6 REMOVE convention)
-    // are tombstones — a key whose LATEST event is a REMOVE disappears
-    // from the merge instead of being ignored (SURVEY §7.6 item 6: the
-    // design must not paint itself into insert/update-only). event_id
-    // makes every window order total, so DuckDB replays the merge
-    // decision for decision.
-    "j4_tombstone_upsert" -> Q(
-      (s, d) => {
-        val base = keyed(tx(s, d)).select(flatCols.map(col): _*)
-        val tiebreak = Seq(col("event_id").desc)
-        val snap = Merge.dedupLatest(
-          base.filter(col("event_id") % 2 === 0), "id", "update_at", tiebreak)
-        val delt = base.filter(col("event_id") % 2 === 1)
-        Merge.upsertWithTombstones(snap, delt, col("entity") === "error",
-            "id", "update_at", tiebreak)
-          .select("id", "account", "update_at", "entity", "amount", "event_id")
-          .orderBy("id")
-      },
-      Some(s"""$TxCte$KeyedCte,
-        |snap AS (SELECT * EXCLUDE rn FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY id ORDER BY update_at DESC, event_id DESC) AS rn
-        |  FROM keyed WHERE event_id % 2 = 0) WHERE rn = 1),
-        |delt0 AS (SELECT *, CASE WHEN entity = 'error' THEN 1 ELSE 0 END AS del
-        |  FROM keyed WHERE event_id % 2 = 1),
-        |delt AS (SELECT * EXCLUDE rn FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY id ORDER BY update_at DESC, del DESC, event_id DESC) AS rn
-        |  FROM delt0) WHERE rn = 1),
-        |u AS (SELECT * FROM delt UNION ALL SELECT *, 0 AS del FROM snap),
-        |m AS (SELECT * FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY id ORDER BY update_at DESC, del DESC, event_id DESC) AS rn
-        |  FROM u) WHERE rn = 1 AND del = 0)
-        |SELECT id, account, update_at, entity, amount, event_id
-        |FROM m ORDER BY id""".stripMargin)),
-
-    // MV1: incremental materialized-aggregate maintenance with
-    // retractions (signed deltas a la differential dataflow / DBSP).
-    // The per-account view is built from the snapshot ONCE, then
-    // maintained across the j4-style tombstone upsert batch from
-    // aggPrev + delta + the old rows of delta-named keys only — the
-    // base is never rescanned. The oracle RECOMPUTES the aggregate
-    // from the fully-merged state, so a hash match proves the
-    // algebraic maintenance path is exactly equivalent to recompute
-    // (inserts, updates with retraction, tombstones, stale no-ops).
-    "mv1_incremental_agg" -> Q(
-      (s, d) => {
-        val base = keyed(tx(s, d)).select(flatCols.map(col): _*)
-        val tiebreak = Seq(col("event_id").desc)
-        val snap = Merge.dedupLatest(
-          base.filter(col("event_id") % 2 === 0), "id", "update_at", tiebreak)
-        val delt = base.filter(col("event_id") % 2 === 1)
-        val aggV1 = graft.ops.Materialize.groupAgg(snap, "account", "amount")
-        graft.ops.Materialize.maintainAgg(aggV1, snap, delt,
-            col("entity") === "error")
-          .select(col("account"), col("n_rows"),
-            col("total").cast("double").as("total"))
-          .orderBy("account")
-      },
-      Some(MvAggSql)),
-
-    // MV2: mv1's STREAMING twin — the delta drains through an
-    // AvailableNow stream in single-file micro-batches; each batch
-    // advances the keyed state AND the aggregate view as versioned
-    // snapshots (reading v=batchId-1 explicitly, the replay-safe
-    // contract for NON-idempotent signed sums — see
-    // CdcStream.viewMaintenance). The final pointed-at view must equal
-    // the one-shot batch recompute: the same oracle as mv1.
-    "mv2_stream_view" -> Q(
-      (s, d) => withStreamShuffle(s) {
-        val base = keyed(tx(s, d)).select(flatCols.map(col): _*)
-        val tiebreak = Seq(col("event_id").desc)
-        // the initial snapshot is PRODUCER scaffolding (the table as it
-        // stood before the stream took over) — memoized like the source
-        // files, so each timed drain measures viewMaintenance, not the
-        // snapshot's dedup recomputed inside batch 0 (twice: state +
-        // aggregate legs both read initialState)
-        val snapDir = scratchOnce("mv2_snap", d)(dir =>
-          Merge.dedupLatest(base.filter(col("event_id") % 2 === 0),
-              "id", "update_at", tiebreak)
-            .coalesce(1).write.mode("overwrite").parquet(dir))
-        val snap = s.read.parquet(snapDir)
-        val delt = base.filter(col("event_id") % 2 === 1)
-        // 2 single-file micro-batches: the replay-safe version chain
-        // needs ≥2 ticks (v0 bootstrap, v1 reads v=0 explicitly); the
-        // 4-batch drain lives in CdcStreamSpec where the law is pinned
-        val srcDir = scratchOnce("mv2_src", d)(
-          delt.repartition(2).write.mode("overwrite").parquet(_))
-        val stateDir = scratch("mv2_state") + "/t"
-        val viewDir = scratch("mv2_view") + "/t"
-        val stream = s.readStream.schema(delt.schema)
-          .option("maxFilesPerTrigger", 1).parquet(srcDir)
-        graft.streaming.CdcStream.viewMaintenance(stream, snap, stateDir,
-          viewDir, col("entity") === "error", scratch("mv2_ckpt"),
-          snapshotPartitions = 1) // KB-scale snapshots at this SF
-        graft.ingest.VersionedDir.current(s, viewDir).get
-          .select(col("account"), col("n_rows"),
-            col("total").cast("double").as("total"))
-          .orderBy("account")
-      },
-      Some(MvAggSql)),
 
     "s1_initial_load_e2e" -> Q(initialLoadE2e, Some(initialLoadSql)),
 
@@ -431,72 +308,6 @@ object Queries {
         |SELECT id, event_id, update_at, amount FROM (
         |  SELECT *, row_number() OVER (PARTITION BY id ORDER BY update_at DESC, event_id DESC) AS rn
         |  FROM keyed) WHERE rn = 1 ORDER BY id""".stripMargin)),
-
-    // W4: SCD type-2 history — every version kept with a validity
-    // interval instead of collapsed latest-wins; the warehouse answer
-    // to "what did this record say at time t". Same single-shuffle
-    // scale profile as w1; event_id makes the order total so the
-    // interval chain is engine-reproducible.
-    "w4_scd2_history" -> Q(
-      (s, d) => {
-        val base = keyed(tx(s, d)).select(flatCols.map(col): _*)
-          .filter(substring(col("update_at"), 9, 2) <= "03")
-        Merge.scd2History(base, Seq("id"), "update_at", Seq(col("event_id").asc))
-          .select("id", "event_id", "valid_from", "valid_to", "is_current", "amount")
-          .orderBy("id", "valid_from", "event_id")
-      },
-      Some(s"""$TxCte$KeyedCte
-        |SELECT id, event_id, update_at AS valid_from,
-        |  lead(update_at) OVER (PARTITION BY id ORDER BY update_at, event_id) AS valid_to,
-        |  lead(update_at) OVER (PARTITION BY id ORDER BY update_at, event_id) IS NULL AS is_current,
-        |  amount
-        |FROM keyed WHERE substr(update_at, 9, 2) <= '03'
-        |ORDER BY id, valid_from, event_id""".stripMargin)),
-
-    // Point-in-time (PIT) join: each probe row retrieves the SCD2
-    // version that was valid AT ITS OWN timestamp — the feature-store
-    // correctness rule that prevents training-time leakage (a feature
-    // computed tomorrow must not describe today's example). Probes span
-    // days 02-04 against the day<=03 history, so matches land in the
-    // MIDDLE of version chains, not just on is_current rows.
-    //
-    // Scale shape: equi-join on the key + interval containment filter;
-    // per-key version counts are bounded (~13 here), so the join never
-    // fans out — each probe matches at most one half-open [from, to)
-    // interval. No window over probes, no range join needed.
-    "pt1_point_in_time" -> Q(
-      (s, d) => {
-        val base = keyed(tx(s, d)).select(flatCols.map(col): _*)
-        val hist = Merge.scd2History(
-            base.filter(substring(col("update_at"), 9, 2) <= "03"),
-            Seq("id"), "update_at", Seq(col("event_id").asc))
-          .select(col("id"), col("valid_from"), col("valid_to"),
-            col("event_id").as("version_event"), col("amount").as("pit_amount"))
-        val probes = keyed(tx(s, d))
-          .filter(substring(col("update_at"), 9, 2).between("02", "04"))
-          .select(col("id"), col("update_at").as("probe_ts"),
-            col("event_id").as("probe_event"))
-        probes.as("p").join(hist.as("h"),
-            col("p.id") === col("h.id") && col("probe_ts") >= col("valid_from") &&
-              (col("valid_to").isNull || col("probe_ts") < col("valid_to")), "left")
-          .select(col("p.id").as("id"), col("probe_ts"), col("probe_event"),
-            col("valid_from"), col("version_event"), col("pit_amount"))
-          .orderBy("id", "probe_ts", "probe_event")
-      },
-      Some(s"""$TxCte$KeyedCte,
-        |hist AS (
-        |  SELECT id, update_at AS valid_from,
-        |         lead(update_at) OVER (PARTITION BY id ORDER BY update_at, event_id) AS valid_to,
-        |         event_id AS version_event, amount AS pit_amount
-        |  FROM keyed WHERE substr(update_at, 9, 2) <= '03'),
-        |probes AS (
-        |  SELECT id, update_at AS probe_ts, event_id AS probe_event
-        |  FROM keyed WHERE substr(update_at, 9, 2) BETWEEN '02' AND '04')
-        |SELECT p.id, p.probe_ts, p.probe_event, h.valid_from, h.version_event, h.pit_amount
-        |FROM probes p LEFT JOIN hist h
-        |  ON p.id = h.id AND p.probe_ts >= h.valid_from
-        | AND (h.valid_to IS NULL OR p.probe_ts < h.valid_to)
-        |ORDER BY p.id, probe_ts, probe_event""".stripMargin)),
 
     // J2: the compare() oracle — full scan vs a lake missing day > 15.
     "j2_compare_except" -> Q(
@@ -758,105 +569,6 @@ object Queries {
         |FROM tx WHERE substr(update_at, 9, 2) = '02' AND substr(update_at, 12, 2) = '01'
         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
 
-    // K5: CSV sink round-trip (header, quoted JSON-ish strings).
-    // QR1: corrupt-record quarantine — malformed JSON lines (planted
-    // deterministically by the producer: every line with
-    // amount % 10 = 0 is prefixed into invalid JSON) must land in a
-    // quarantine bucket via PERMISSIVE + columnNameOfCorruptRecord,
-    // NEVER silently null-fill into the good rows. The ingestion-
-    // robustness gate every feed needs; the oracle computes both
-    // buckets from the PLANTING RULE, so the parse behavior itself is
-    // what's checked.
-    "qr1_corrupt_quarantine" -> Q(
-      (s, d) => {
-        val day13 = tx(s, d).filter(substring(col("update_at"), 9, 2) === "13")
-          .select("account", "create_at", "update_at", "entity", "amount",
-            "is_credit", "note")
-        val src = scratchOnce("qr1_src", d) { dir =>
-          day13
-            .select(to_json(struct(col("account"), col("create_at"),
-              col("update_at"), col("entity"), col("amount"),
-              col("is_credit"), col("note"))).as("value"),
-              col("amount"))
-            .select(when(pmod(col("amount"), lit(10)) === 0,
-              concat(lit("CORRUPT"), col("value"))).otherwise(col("value"))
-              .as("value"))
-            .coalesce(2).write.mode("overwrite").text(dir)
-        }
-        val schema = Schemas.flatCdcRow.add("_corrupt", "string")
-        s.read.schema(schema)
-          .option("mode", "PERMISSIVE")
-          .option("columnNameOfCorruptRecord", "_corrupt")
-          .json(src)
-          .groupBy(when(col("_corrupt").isNotNull, lit("__quarantined"))
-            .otherwise(col("entity")).as("bucket"))
-          .agg(count(lit(1)).cast("long").as("n"),
-            sum(col("amount")).cast("long").as("amt"))
-          .orderBy("bucket")
-      },
-      Some(s"""$TxCte, sl AS (SELECT entity, amount FROM tx
-        |  WHERE substr(update_at, 9, 2) = '13')
-        |SELECT entity AS bucket, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(amount) AS BIGINT) AS amt
-        |FROM sl WHERE amount % 10 != 0 GROUP BY 1
-        |UNION ALL
-        |SELECT '__quarantined', CAST(count(*) AS BIGINT),
-        |  CAST(NULL AS BIGINT)
-        |FROM sl WHERE amount % 10 = 0
-        |ORDER BY bucket""".stripMargin)),
-
-    // K13: schema-evolution merge — a v2 batch arrives with a NEW
-    // column (channel) the v1 lake rows never had; mergeSchema read
-    // unifies (v1 rows carry NULL channel), then latest-wins dedup
-    // builds the snapshot. The lakehouse capability every long-lived
-    // CDC table eventually needs: no rewrite of historical files, the
-    // new column is simply absent-as-null behind the unified schema.
-    "k13_schema_evolution" -> Q(
-      (s, d) => {
-        // event_id rides along as the EXPLICIT version tiebreak (the
-        // flagshipUpsert convention): dedupLatest's content-hash
-        // last-resort and the oracle's bare update_at window could
-        // order update_at ties differently — unreachable under the
-        // faker's strictly monotone clock, but the query must not
-        // depend on that generator invariant.
-        val v1 = tx(s, d).filter(substring(col("update_at"), 9, 2) === "11")
-          .select("account", "create_at", "update_at", "entity", "amount",
-            "is_credit", "note", "event_id")
-        val v2 = tx(s, d).filter(substring(col("update_at"), 9, 2) === "12")
-          .select(col("account"), col("create_at"), col("update_at"),
-            col("entity"), col("amount"), col("is_credit"), col("note"),
-            col("event_id"), substring(col("entity"), 1, 2).as("channel"))
-        val lake = scratch("k13_lake")
-        v1.write.mode("overwrite").parquet(s"$lake/batch=1")
-        v2.write.mode("append").parquet(s"$lake/batch=2")
-        val unified = s.read.option("mergeSchema", "true")
-          .option("recursiveFileLookup", "true").parquet(lake)
-        graft.merge.Merge.dedupLatest(
-            unified.withColumn("__k",
-              concat(col("account"), lit("\u0000"), col("entity"))),
-            "__k", "update_at", Seq(col("event_id").desc))
-          .groupBy(col("entity"), coalesce(col("channel"), lit("legacy"))
-            .as("channel"))
-          .agg(count(lit(1)).cast("long").as("n"),
-            sum(col("amount")).cast("long").as("amt"))
-          .orderBy("entity", "channel")
-      },
-      Some(s"""$TxCte, u AS (
-        |  SELECT account, update_at, entity, amount, event_id,
-        |    CAST(NULL AS VARCHAR) AS channel
-        |  FROM tx WHERE substr(update_at, 9, 2) = '11'
-        |  UNION ALL
-        |  SELECT account, update_at, entity, amount, event_id,
-        |    substr(entity, 1, 2) AS channel
-        |  FROM tx WHERE substr(update_at, 9, 2) = '12'),
-        |w AS (SELECT *, row_number() OVER (
-        |    PARTITION BY account, entity
-        |    ORDER BY update_at DESC, event_id DESC) AS rn
-        |  FROM u)
-        |SELECT entity, coalesce(channel, 'legacy') AS channel,
-        |  CAST(count(*) AS BIGINT) AS n, CAST(sum(amount) AS BIGINT) AS amt
-        |FROM w WHERE rn = 1 GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
-
     "k5_csv_roundtrip" -> Q(
       (s, d) => {
         val day2 = tx(s, d).filter(substring(col("update_at"), 9, 2) === "02")
@@ -871,26 +583,6 @@ object Queries {
       Some(s"""$TxCte
         |SELECT entity, CAST(count(*) AS BIGINT) AS n, CAST(sum(amount) AS BIGINT) AS amt
         |FROM tx WHERE substr(update_at, 9, 2) = '02'
-        |GROUP BY 1 ORDER BY 1""".stripMargin)),
-
-    // K8: ORC sink round-trip — columnar-format breadth beside parquet
-    // (zlib ORC write, schema'd read-back, re-aggregation vs the same
-    // rows derived straight from parquet).
-    "k8_orc_roundtrip" -> Q(
-      (s, d) => {
-        val day6 = tx(s, d).filter(substring(col("update_at"), 9, 2) === "06")
-          .select("account", "create_at", "update_at", "entity",
-            "amount", "is_credit", "note")
-        val dirOut = scratch("orc_sink")
-        day6.write.mode("overwrite").option("compression", "zlib").orc(dirOut)
-        s.read.orc(dirOut)
-          .groupBy(col("entity"))
-          .agg(count(lit(1)).cast("long").as("n"), sum(col("amount")).cast("long").as("amt"))
-          .orderBy("entity")
-      },
-      Some(s"""$TxCte
-        |SELECT entity, CAST(count(*) AS BIGINT) AS n, CAST(sum(amount) AS BIGINT) AS amt
-        |FROM tx WHERE substr(update_at, 9, 2) = '06'
         |GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // JF1: semi-structured payload extraction — from_json over the
@@ -1130,100 +822,6 @@ object Queries {
         |        AND substr(update_at, 12, 2) IN ('00', '01'))
         |WHERE rn = 1 ORDER BY id""".stripMargin)),
 
-    // T8 (stream form): the CUSTOM-STATE latest-per-key operator
-    // (flatMapGroupsWithState, O(live keys) state) drained with
-    // AvailableNow into a memory sink. Every key's final emission must
-    // equal the batch latest-wins dedup of the same landed files — the
-    // stream/batch consistency law, under the oracle gate.
-    "t8_stream_latest" -> Q(
-      (s, d) => withStreamShuffle(s) {
-        import org.apache.spark.sql.streaming.Trigger
-        import s.implicits._
-        val hour0 = tx(s, d).filter(substring(col("update_at"), 9, 2) === "06" &&
-            substring(col("update_at"), 12, 2) === "00")
-          .select("account", "create_at", "update_at", "entity", "amount", "is_credit", "note")
-        val landing = scratchOnce("t8_landing", d)(Ingest.landCdc(hour0, _))
-        val events = s.readStream.schema(Schemas.flatCdcRow)
-          .option("recursiveFileLookup", "true")
-          .option("maxFilesPerTrigger", halfFilesTrigger(landing))
-          .json(landing)
-          .withColumn("eventName", lit("INSERT"))
-          .as[graft.model.CdcEvent]
-        // update-mode emissions drain to a parquet dir per micro-batch
-        // (file sinks can't take update mode directly) — emissions land
-        // distributed, nothing accumulates on the driver, and the same
-        // shape works for an unbounded production drain
-        val outDir = scratch("t8_out")
-        CdcStream.latestPerKeyStream(events).writeStream
-          .outputMode("update")
-          .foreachBatch { (batch: Dataset[graft.model.CdcEvent], _: Long) =>
-            batch.write.mode("append").parquet(outDir): Unit
-          }
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", scratch("t8_ckpt"))
-          .start()
-          .awaitTermination()
-        // collapse the drained emissions to the final winner per key
-        // (idempotent when keys emit once); an hour with zero rows
-        // emits no batch at all — schema must come from us, not the dir
-        val emitted = s.read.schema(Schemas.flatCdcRow).parquet(outDir)
-          .withColumn("__k", concat(col("account"), lit("\u0000"), col("create_at")))
-        Merge.dedupLatest(emitted, "__k", "update_at")
-          .select("account", "create_at", "update_at", "entity", "amount", "is_credit", "note")
-          .orderBy("account", "create_at")
-      },
-      Some(s"""$TxCte
-        |SELECT account, create_at, update_at, entity, amount, is_credit, note
-        |FROM tx WHERE substr(update_at, 9, 2) = '06' AND substr(update_at, 12, 2) = '00'
-        |ORDER BY account, create_at""".stripMargin)),
-
-    // SDD1 (stream form): exact streaming dedup — first occurrence per
-    // (account, entity) wins; per-key state is evicted by the
-    // event-time watermark (production sets it to the dedup horizon;
-    // here it exceeds the corpus span, so the drain equals batch
-    // DISTINCT exactly). Output carries ONLY the key columns, so the
-    // emission is independent of which physical duplicate arrived
-    // first — deterministic under any file/trigger interleaving.
-    "sdd1_stream_dedup" -> Q(
-      (s, d) => withStreamShuffle(s) {
-        import org.apache.spark.sql.streaming.Trigger
-        val day9 = tx(s, d).filter(substring(col("update_at"), 9, 2) === "09")
-          .select("account", "create_at", "update_at", "entity", "amount",
-            "is_credit", "note")
-        // flat two-file source (the k6 producer shape): the operator
-        // under test is the stateful dedup, not the landing layout —
-        // a minute-partitioned day is hundreds of tiny files whose
-        // per-batch listing would dominate the measurement
-        val landing = scratchOnce("sdd1_src", d)(
-          day9.coalesce(2).write.mode("overwrite").json(_))
-        val events = s.readStream.schema(Schemas.flatCdcRow)
-          .option("maxFilesPerTrigger", halfFilesTrigger(landing))
-          .json(landing)
-          .withColumn("ts", to_timestamp(substring(col("update_at"), 1, 26),
-            "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"))
-        val outDir = scratch("sdd1_out")
-        events.withWatermark("ts", "90 days")
-          .dropDuplicates("account", "entity")
-          .select("account", "entity")
-          .writeStream.outputMode("append")
-          .foreachBatch {
-            (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-              batch.write.mode("append").parquet(outDir): Unit
-          }
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", scratch("sdd1_ckpt"))
-          .start().awaitTermination()
-        import org.apache.spark.sql.types.{StructField, StructType, StringType}
-        s.read.schema(StructType(Seq(StructField("account", StringType),
-            StructField("entity", StringType))))
-          .parquet(outDir)
-          .orderBy("account", "entity")
-      },
-      Some(s"""$TxCte
-        |SELECT DISTINCT account, entity FROM tx
-        |WHERE substr(update_at, 9, 2) = '09'
-        |ORDER BY account, entity""".stripMargin)),
-
     // SSR1: checkpoint RECOVERY — the T5/T8 exactly-once claim
     // exercised through an ACTUAL stop-and-restart rather than a
     // single drain: the morning slice lands, the stream drains
@@ -1282,152 +880,6 @@ object Queries {
         |WHERE substr(update_at, 9, 2) = '14'
         |ORDER BY account, entity""".stripMargin)),
 
-    // SLW1: streaming SLIDING windows — 10-min windows sliding every
-    // 5 min (each event lands in exactly TWO overlapping windows),
-    // the overlap semantics t2's tumbling windows can't express;
-    // watermark-closed append emission with the ssw1 flush-sentinel
-    // drain-to-batch-parity trick. Oracle assigns each event to its
-    // two window starts in closed form (floor-to-slide and one slide
-    // back) — no window function needed.
-    "slw1_stream_sliding" -> Q(
-      (s, d) => withStreamShuffle(s) {
-        import org.apache.spark.sql.streaming.Trigger
-        val day15 = tx(s, d).filter(substring(col("update_at"), 9, 2) === "15")
-          .select("account", "create_at", "update_at", "entity", "amount",
-            "is_credit", "note")
-        val src = scratchOnce("slw1_src", d) { dir =>
-          day15.coalesce(2).write.mode("overwrite").json(dir)
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(dir, "zzz_flush.json"),
-            """{"account":"__flush","create_at":"2024-12-31T00:00:00.000000+0000","update_at":"2024-12-31T00:00:00.000000+0000","entity":"zzzflush","amount":0,"is_credit":0,"note":""}""")
-        }
-        val events = s.readStream.schema(Schemas.flatCdcRow)
-          .option("maxFilesPerTrigger", halfFilesTrigger(src))
-          .json(src)
-          .withColumn("ts", to_timestamp(substring(col("update_at"), 1, 26),
-            "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"))
-        val outDir = scratch("slw1_out")
-        events.withWatermark("ts", "2 days")
-          .groupBy(window(col("ts"), "10 minutes", "5 minutes").as("w"),
-            col("entity"))
-          .agg(count(lit(1)).cast("long").as("n"),
-            sum(col("amount")).cast("long").as("amt"))
-          .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss")
-              .as("win_start"), col("entity"), col("n"), col("amt"))
-          .writeStream.outputMode("append")
-          .foreachBatch {
-            (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-              batch.write.mode("append").parquet(outDir): Unit
-          }
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", scratch("slw1_ckpt"))
-          .start().awaitTermination()
-        import org.apache.spark.sql.types.{StructField, StructType, StringType, LongType}
-        s.read.schema(StructType(Seq(StructField("win_start", StringType),
-            StructField("entity", StringType), StructField("n", LongType),
-            StructField("amt", LongType))))
-          .parquet(outDir)
-          .filter(col("entity") =!= "zzzflush")
-          .orderBy("win_start", "entity")
-      },
-      Some(s"""$TxCte, sl AS (
-        |  SELECT entity, amount, CAST(substr(update_at, 1, 26) AS TIMESTAMP) AS ts
-        |  FROM tx WHERE substr(update_at, 9, 2) = '15'),
-        |ex AS (SELECT entity, amount,
-        |    make_timestamp((epoch_us(ts) // 300000000) * 300000000) AS w1
-        |  FROM sl),
-        |wn AS (SELECT entity, amount, w1 AS ws FROM ex
-        |  UNION ALL
-        |  SELECT entity, amount, w1 - INTERVAL '5 minutes' FROM ex)
-        |SELECT strftime(ws, '%Y-%m-%d %H:%M:%S') AS win_start, entity,
-        |  CAST(count(*) AS BIGINT) AS n, CAST(sum(amount) AS BIGINT) AS amt
-        |FROM wn GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
-
-    // SSW1 (stream form): streaming SESSION windows — gap-merged
-    // per-account sessions maintained as watermarked session_window
-    // state and emitted ONLY when the watermark closes them (append
-    // mode). A '__flush' sentinel far past the corpus span rides the
-    // source so the final no-data micro-batch's watermark closes every
-    // real session (the standard drain-to-batch-parity trick); the
-    // sentinel's own session is filtered from the output. Oracle =
-    // t9's batch gap sessionization of the same slice.
-    "ssw1_stream_sessions" -> Q(
-      (s, d) => withStreamShuffle(s) {
-        import org.apache.spark.sql.streaming.Trigger
-        val day10 = tx(s, d).filter(substring(col("update_at"), 9, 2) === "10")
-          .select("account", "create_at", "update_at", "entity", "amount",
-            "is_credit", "note")
-        val src = scratchOnce("ssw1_src", d) { dir =>
-          day10.coalesce(2).write.mode("overwrite").json(dir)
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(dir, "zzz_flush.json"),
-            """{"account":"__flush","create_at":"2024-12-31T00:00:00.000000+0000","update_at":"2024-12-31T00:00:00.000000+0000","entity":"E","amount":0,"is_credit":0,"note":""}""")
-        }
-        val events = s.readStream.schema(Schemas.flatCdcRow)
-          .option("maxFilesPerTrigger", halfFilesTrigger(src))
-          .json(src)
-          .withColumn("ts", to_timestamp(substring(col("update_at"), 1, 26),
-            "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"))
-        val outDir = scratch("ssw1_out")
-        // 2-day delay: out-of-order arrivals across the two source
-        // files stay within the same slice day, so nothing real is
-        // ever late; the sentinel still closes every session
-        events.withWatermark("ts", "2 days")
-          .groupBy(session_window(col("ts"), "5 minutes").as("sw"),
-            col("account"))
-          .agg(count(lit(1)).cast("long").as("n_events"))
-          .select(col("account"),
-            date_format(col("sw.start"), "yyyy-MM-dd HH:mm:ss")
-              .as("session_start"),
-            date_format(col("sw.end"), "yyyy-MM-dd HH:mm:ss")
-              .as("session_end"),
-            col("n_events"))
-          .writeStream.outputMode("append")
-          .foreachBatch {
-            (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-              batch.write.mode("append").parquet(outDir): Unit
-          }
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", scratch("ssw1_ckpt"))
-          .start().awaitTermination()
-        import org.apache.spark.sql.types.{StructField, StructType, StringType, LongType}
-        s.read.schema(StructType(Seq(StructField("account", StringType),
-            StructField("session_start", StringType),
-            StructField("session_end", StringType),
-            StructField("n_events", LongType))))
-          .parquet(outDir)
-          .filter(col("account") =!= "__flush")
-          .orderBy("account", "session_start")
-      },
-      Some(s"""$TxCte, sl AS (
-        |  SELECT account, CAST(substr(update_at, 1, 26) AS TIMESTAMP) AS ts
-        |  FROM tx WHERE substr(update_at, 9, 2) = '10'),
-        |o AS (SELECT account, ts,
-        |    lag(ts) OVER (PARTITION BY account ORDER BY ts) AS pts
-        |  FROM sl),
-        |fl AS (SELECT account, ts,
-        |    -- strict break (ts > pts + gap) matches Spark's
-        |    -- session_window EXACTLY: Spark merges sessions whose
-        |    -- windows touch, so an event at EXACTLY prev+gap still
-        |    -- merges — verified empirically by SessionsSpec's
-        |    -- exact-gap boundary test, so the comparator is aligned
-        |    -- by construction, not by the faker clock's
-        |    -- microsecond-jitter making exact gaps measure-zero
-        |    CASE WHEN pts IS NULL
-        |      OR ts > pts + INTERVAL '5 minutes' THEN 1 ELSE 0 END AS brk
-        |  FROM o),
-        |se AS (SELECT account, ts,
-        |    sum(brk) OVER (PARTITION BY account ORDER BY ts
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |  FROM fl)
-        |SELECT account,
-        |  strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-        |  strftime(max(ts) + INTERVAL '5 minutes', '%Y-%m-%d %H:%M:%S')
-        |    AS session_end,
-        |  CAST(count(*) AS BIGINT) AS n_events
-        |FROM se GROUP BY account, sid
-        |ORDER BY account, session_start""".stripMargin)),
-
     // K3/T1/T7 (stream form): the streaming landing sink — raw events
     // (incl. REMOVEs, which the consumer drops, T7) arrive as a stream
     // and land minute-partitioned exactly like the Lambda consumer;
@@ -1462,122 +914,6 @@ object Queries {
         |FROM tx WHERE substr(update_at, 9, 2) = '07' AND substr(update_at, 12, 2) = '00'
         |  AND entity <> 'error'
         |GROUP BY 1 ORDER BY 1""".stripMargin)),
-
-    // SD1: STREAMING exact dedup — the corpus exact-dedup decision as a
-    // continuously-ingesting stream. One day-hour of events is landed
-    // TWICE (two files, forced into separate micro-batches by
-    // maxFilesPerTrigger=1, so suppression is cross-batch state, not
-    // within-batch distinct); dropDuplicatesWithinWatermark on a
-    // full-row content hash must collapse the doubled stream back to
-    // the batch DISTINCT of the hour. Horizon (2 days) exceeds the
-    // hour's span, so no state evicts mid-run and stream == batch
-    // exactly; at scale the horizon shrinks to the real replay window.
-    "sd1_stream_dedup" -> Q(
-      (s, d) => withStreamShuffle(s) {
-        import org.apache.spark.sql.streaming.Trigger
-        val cols = Seq("account", "create_at", "update_at", "entity",
-          "amount", "is_credit", "note")
-        val hour = tx(s, d).filter(substring(col("update_at"), 9, 2) === "05" &&
-            substring(col("update_at"), 12, 2) === "00")
-          .select(cols.map(col): _*)
-        val srcDir = scratchOnce("sd1_src", d) { dir =>
-          hour.coalesce(1).write.mode("overwrite").json(dir)
-          hour.coalesce(1).write.mode("append").json(dir) // exact-duplicate file
-        }
-        val stream = s.readStream.schema(hour.schema)
-          .option("maxFilesPerTrigger", 1).json(srcDir)
-        val dd = CdcStream.dedupStream(stream,
-          to_timestamp(col("update_at"), Schemas.TsPattern), "2 days",
-          // unit-sep-joined + null sentinel: without them ("ab","c") vs
-          // ("a","bc"), or ("a",null) vs (null,"a"), would collide
-          md5(concat_ws("\u001f",
-            cols.map(c => coalesce(col(c).cast("string"), lit("\u0001"))): _*)))
-        dd.writeStream.format("memory").queryName("sd1_dedup")
-          .outputMode("append").trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", scratch("sd1_ckpt"))
-          .start().awaitTermination()
-        s.table("sd1_dedup").select(cols.map(col): _*)
-          .orderBy(cols.map(col): _*)
-      },
-      Some(s"""$TxCte
-        |SELECT DISTINCT account, create_at, update_at, entity, amount, is_credit, note
-        |FROM tx WHERE substr(update_at, 9, 2) = '05' AND substr(update_at, 12, 2) = '00'
-        |ORDER BY account, create_at, update_at, entity, amount, is_credit, note""".stripMargin)),
-
-    // ST1: stream-static ENRICHMENT join — the standard CDC pattern of
-    // decorating a stream with a broadcast dimension (per-account tier
-    // derived deterministically so the oracle can rebuild it). The dim
-    // is broadcast: each micro-batch joins map-side, no stream shuffle.
-    "st1_stream_enrich" -> Q(
-      (s, d) => withStreamShuffle(s) {
-        import org.apache.spark.sql.streaming.Trigger
-        val hour = tx(s, d).filter(substring(col("update_at"), 9, 2) === "03" &&
-            substring(col("update_at"), 12, 2) === "00")
-          .select("account", "create_at", "update_at", "entity",
-            "amount", "is_credit", "note")
-        val srcDir = scratchOnce("st1_src", d)(
-          hour.coalesce(1).write.mode("overwrite").json(_))
-        val dim = tx(s, d).select(col("account")).distinct()
-          .withColumn("tier",
-            pmod(substring(col("account"), 6, 10).cast("long"), lit(5)).cast("int"))
-        val stream = s.readStream.schema(hour.schema)
-          .option("maxFilesPerTrigger", 1).json(srcDir)
-        stream.join(broadcast(dim), "account")
-          .writeStream.format("memory").queryName("st1_enrich")
-          .outputMode("append").trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", scratch("st1_ckpt"))
-          .start().awaitTermination()
-        s.table("st1_enrich")
-          .select("account", "update_at", "entity", "amount", "tier")
-          .orderBy("account", "update_at", "entity")
-      },
-      Some(s"""$TxCte
-        |SELECT account, update_at, entity, amount,
-        |       CAST(CAST(substr(account, 6) AS BIGINT) % 5 AS INTEGER) AS tier
-        |FROM tx WHERE substr(update_at, 9, 2) = '03' AND substr(update_at, 12, 2) = '00'
-        |ORDER BY account, update_at, entity""".stripMargin)),
-
-    // SSJ1: stream-stream inner join — credits and debits of one day
-    // arrive as two independent streams and pair up per account within
-    // a shared event-time window. The window equality is the state
-    // bound (O(horizon), not O(history)); matches emit immediately.
-    // Oracle = the batch join of the same two slices.
-    "ssj1_stream_stream_join" -> Q(
-      (s, d) => withStreamShuffle(s) {
-        import org.apache.spark.sql.streaming.Trigger
-        val day = tx(s, d).filter(substring(col("update_at"), 9, 2) === "06")
-          .select("account", "update_at", "amount", "is_credit")
-        val srcC = scratchOnce("ssj1_credit", d)(
-          day.filter(col("is_credit") === 1).coalesce(1).write.mode("overwrite").json(_))
-        val srcD = scratchOnce("ssj1_debit", d)(
-          day.filter(col("is_credit") === 0).coalesce(1).write.mode("overwrite").json(_))
-        val schema = day.schema
-        val credits = s.readStream.schema(schema).json(srcC)
-          .withColumn("ts_c", to_timestamp(col("update_at"), Schemas.TsPattern))
-          .select(col("account"), col("ts_c"),
-            col("update_at").as("credit_at"), col("amount").as("credit_amt"))
-        val debits = s.readStream.schema(schema).json(srcD)
-          .withColumn("ts_d", to_timestamp(col("update_at"), Schemas.TsPattern))
-          .select(col("account"), col("ts_d"),
-            col("update_at").as("debit_at"), col("amount").as("debit_amt"))
-        CdcStream.windowedStreamJoin(credits, "ts_c", debits, "ts_d",
-            windowDur = "1 day", watermark = "2 days", keys = Seq("account"))
-          .select("account", "credit_at", "credit_amt", "debit_at", "debit_amt")
-          .writeStream.format("memory").queryName("ssj1_join")
-          .outputMode("append").trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", scratch("ssj1_ckpt"))
-          .start().awaitTermination()
-        s.table("ssj1_join")
-          .orderBy("account", "credit_at", "debit_at", "credit_amt", "debit_amt")
-      },
-      Some(s"""$TxCte,
-        |f AS (SELECT account, update_at, amount, is_credit FROM tx
-        |      WHERE substr(update_at, 9, 2) = '06')
-        |SELECT a.account, a.update_at AS credit_at, a.amount AS credit_amt,
-        |       b.update_at AS debit_at, b.amount AS debit_amt
-        |FROM f a JOIN f b ON a.account = b.account
-        |WHERE a.is_credit = 1 AND b.is_credit = 0
-        |ORDER BY a.account, credit_at, debit_at, credit_amt, debit_amt""".stripMargin)),
 
     // K7: small-file compaction — write one day fragmented (6 files),
     // compact it to one file via the dynamic-overwrite path, and prove
@@ -1630,400 +966,6 @@ object Queries {
         |  AND account NOT IN ('user-3', 'user-7')
         |GROUP BY 1 ORDER BY 1""".stripMargin)),
 
-    // Write-audit-publish: the lakehouse integrity gate. Batch 1 is
-    // clean and publishes v1; batch 2 carries planted violations
-    // (nulled custkeys at %89, a duplicated %97 key slice), fails its
-    // audit against the STAGED snapshot, and must NOT move the pointer
-    // — the emitted live_version/live_rows prove the reader still sees
-    // v1. The oracle recomputes every violation count from the plant
-    // rule, so a WAP that publishes bad data turns the whole row set red.
-    "k12_write_audit_publish" -> Q(
-      (s, d) => {
-        val P = graft.ops.Profile
-        val dir = scratch("k12_wap")
-        val orders = s.read.parquet(s"$d/orders.parquet")
-        def audit(df: DataFrame): DataFrame = P.qualityReport(Seq(
-          P.expectUnique(df, "pk_unique", Seq("o_orderkey")),
-          P.expectComplete(df, "custkey_complete", "o_custkey"),
-          P.expectInRange(df, "price_range", "o_totalprice", 0.0, 1e9)))
-        val (rep1, _) = graft.ingest.VersionedDir.writeAuditPublish(orders, dir, 1L, audit)
-        val bad = orders.withColumn("o_custkey",
-          when(col("o_orderkey") % 89 === 0, lit(null).cast("bigint"))
-            .otherwise(col("o_custkey")))
-        val bad2 = bad.unionByName(bad.filter(col("o_orderkey") % 97 === 0))
-        val (rep2, _) = graft.ingest.VersionedDir.writeAuditPublish(bad2, dir, 2L, audit)
-        val liveMeta = broadcast(
-          graft.ingest.VersionedDir.current(s, dir).get
-            .agg(count(lit(1)).cast("long").as("live_rows"))
-            .withColumn("live_version",
-              lit(graft.ingest.VersionedDir.currentVersion(s, dir).get)))
-        rep1.withColumn("batch", lit(1)).unionByName(rep2.withColumn("batch", lit(2)))
-          .crossJoin(liveMeta)
-          .select("batch", "check_name", "n_violations", "pass",
-            "live_version", "live_rows")
-          .orderBy("batch", "check_name")
-      },
-      Some("""WITH n97 AS (SELECT CAST(count(*) AS BIGINT) AS v FROM orders WHERE o_orderkey % 97 = 0),
-        |n89 AS (SELECT CAST(count(*) AS BIGINT) AS v FROM orders WHERE o_orderkey % 89 = 0),
-        |n89d AS (SELECT CAST(count(*) AS BIGINT) AS v FROM orders
-        |         WHERE o_orderkey % 89 = 0 AND o_orderkey % 97 = 0),
-        |nall AS (SELECT CAST(count(*) AS BIGINT) AS v FROM orders)
-        |SELECT 1 AS batch, 'custkey_complete' AS check_name,
-        |  CAST(0 AS BIGINT) AS n_violations, TRUE AS pass,
-        |  CAST(1 AS BIGINT) AS live_version, nall.v AS live_rows FROM nall
-        |UNION ALL SELECT 1, 'pk_unique', 0, TRUE, 1, nall.v FROM nall
-        |UNION ALL SELECT 1, 'price_range', 0, TRUE, 1, nall.v FROM nall
-        |UNION ALL SELECT 2, 'custkey_complete', n89.v + n89d.v,
-        |  (n89.v + n89d.v) = 0, 1, nall.v FROM n89, n89d, nall
-        |UNION ALL SELECT 2, 'pk_unique', n97.v, n97.v = 0, 1, nall.v FROM n97, nall
-        |UNION ALL SELECT 2, 'price_range', 0, TRUE, 1, nall.v FROM nall
-        |ORDER BY batch, check_name""".stripMargin)),
-
-    // T9 (analytics form): gap-based sessionization — the standard
-    // event-analytics window chain (lag → gap flag → running sum →
-    // per-session aggregate). Two windows, both partitioned by user —
-    // one shuffle on the user key, no global sort.
-    "t9_sessionize" -> Q(
-      (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts"))
-        events(s, d)
-          .withColumn("__gap",
-            when(col("ts") - lag(col("ts"), 1).over(byUser) >
-              expr("INTERVAL 5 MINUTES"), 1)
-              .when(lag(col("ts"), 1).over(byUser).isNull, 1)
-              .otherwise(0))
-          .withColumn("session_id", sum(col("__gap")).over(byUser).cast("long"))
-          .groupBy(col("user_id"), col("session_id"))
-          .agg(count(lit(1)).cast("long").as("n_events"),
-            min(col("ts")).as("t_start"), max(col("ts")).as("t_end"))
-          .orderBy("user_id", "session_id")
-      },
-      Some("""WITH g AS (
-        |  SELECT user_id, ts,
-        |    CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL THEN 1
-        |         WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-        |              > INTERVAL 5 MINUTE THEN 1
-        |         ELSE 0 END AS gap
-        |  FROM events),
-        |sess AS (SELECT user_id, ts,
-        |  CAST(sum(gap) OVER (PARTITION BY user_id ORDER BY ts
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        |  FROM g)
-        |SELECT user_id, session_id, CAST(count(*) AS BIGINT) AS n_events,
-        |       min(ts) AS t_start, max(ts) AS t_end
-        |FROM sess GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
-
-    // K9: hash-bucket lake — the O(touched-buckets) merge tick. Bulk
-    // load days <= 10, merge days 11-12 as a delta (only the buckets
-    // the delta's keys hash into are read or rewritten), then report
-    // per-bucket totals. The md5-derived bucket id is itself part of
-    // the oracle check.
-    "k9_bucket_merge" -> Q(
-      (s, d) => {
-        val base = keyed(tx(s, d)).select(flatCols.map(col): _*)
-        val init = base.filter(substring(col("update_at"), 9, 2) <= "10")
-        val delta = base.filter(substring(col("update_at"), 9, 2).between("11", "12"))
-        val dir = scratch("k9_lake")
-        HashBucketLake.bulkWrite(
-          Merge.dedupLatest(init, "id", "update_at", Seq(col("event_id").desc)),
-          dir, nBuckets = 8)
-        HashBucketLake.mergeCommit(s, delta, dir, nBuckets = 8)
-        HashBucketLake.read(s, dir)
-          .groupBy(col("bucket").cast("long").as("bucket"))
-          .agg(count(lit(1)).cast("long").as("n"),
-            sum(col("amount")).cast("long").as("amt"))
-          .orderBy("bucket")
-      },
-      Some(s"""$TxCte$KeyedCte,
-        |u AS (SELECT * FROM keyed WHERE substr(update_at, 9, 2) <= '12'),
-        |m AS (SELECT * FROM (SELECT *, row_number() OVER (
-        |        PARTITION BY id ORDER BY update_at DESC, event_id DESC) AS rn
-        |      FROM u) WHERE rn = 1),
-        |b AS (SELECT id, amount,
-        |        list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |          list_transform(range(1, 9),
-        |            i -> CAST(strpos('0123456789abcdef', substr(md5(id), i, 1)) - 1 AS BIGINT))),
-        |          (a, x) -> a * 16 + x) % 8 AS bucket
-        |      FROM m)
-        |SELECT bucket, CAST(count(*) AS BIGINT) AS n, CAST(sum(amount) AS BIGINT) AS amt
-        |FROM b GROUP BY 1 ORDER BY 1""".stripMargin)),
-
-    // J5: the upsertJoin ≡ upsert law UNDER THE GATE — both merge
-    // formulations run over the same bucketed snapshot + delta and the
-    // emitted row carries their exceptAll diff, which the oracle pins
-    // to zero. The snapshot goes through the CATALOG-BUCKETED lake, so
-    // this row also exercises the shuffle-free snapshot path end to end
-    // (the plan pin itself lives in PlanGoldenSpec: zero snapshot-side
-    // exchanges under the join). n_rows is tiebreak-free (one winner
-    // per key ⇒ count = distinct ids), so DuckDB reproduces it without
-    // replaying the content-hash tiebreak.
-    "j5_upsert_join_equiv" -> Q(
-      (s, d) => {
-        import org.apache.spark.storage.StorageLevel
-        val base = keyed(tx(s, d)).select(flatCols.map(col): _*)
-        val tiebreak = Seq(col("event_id").desc)
-        val snap = Merge.dedupLatest(
-          base.filter(col("event_id") % 2 === 0), "id", "update_at", tiebreak)
-        val delt = base.filter(col("event_id") % 2 === 1)
-        val tbl = "graft_j5_snap"
-        graft.ingest.BucketedLake.bulkWrite(snap, tbl, nBuckets = 8)
-        val snapB = graft.ingest.BucketedLake.read(s, tbl)
-        val a = Merge.upsert(snapB, delt, "id", "update_at")
-          .persist(StorageLevel.DISK_ONLY)
-        val b = Merge.upsertJoin(snapB, delt, "id", "update_at")
-          .persist(StorageLevel.DISK_ONLY)
-        val nd = a.exceptAll(b).unionByName(b.exceptAll(a))
-          .agg(count(lit(1)).cast("long").as("n_diff"))
-        a.agg(count(lit(1)).cast("long").as("n_rows")).crossJoin(broadcast(nd))
-      },
-      Some(s"""$TxCte$KeyedCte
-        |SELECT CAST(count(DISTINCT id) AS BIGINT) AS n_rows,
-        |       CAST(0 AS BIGINT) AS n_diff
-        |FROM keyed""".stripMargin)),
-
-    // GF1: time-series regularization — dense minute spine over one
-    // day's events, zero-filled counts, forward-filled last amount.
-    "gf1_gap_fill" -> Q(
-      (s, d) => {
-        val perMin = events(s, d).filter(dayofmonth(col("ts")) === 6)
-          .groupBy(date_trunc("minute", col("ts")).as("m"))
-          .agg(count(lit(1)).cast("long").as("n"),
-            sum((col("event_id") % 1000).cast("int")).cast("long").as("amt"))
-        val filled = graft.ops.TimeSeries.forwardFill(
-          graft.ops.TimeSeries.gapFill(perMin, "m", "1 minute"), "m", Seq("amt"))
-        filled.select(date_format(col("m"), "yyyy-MM-dd HH:mm").as("minute"),
-            coalesce(col("n"), lit(0L)).as("n"), col("amt"), col("amt_ffill"))
-          .orderBy("minute")
-      },
-      Some("""WITH f AS (SELECT date_trunc('minute', ts) AS m,
-        |        CAST(count(*) AS BIGINT) AS n,
-        |        CAST(sum(CAST(event_id % 1000 AS INTEGER)) AS BIGINT) AS amt
-        |      FROM events WHERE date_part('day', ts) = 6 GROUP BY 1),
-        |sp AS (SELECT unnest(generate_series((SELECT min(m) FROM f),
-        |         (SELECT max(m) FROM f), INTERVAL 1 MINUTE)) AS m),
-        |g AS (SELECT sp.m, coalesce(f.n, 0) AS n, f.amt
-        |      FROM sp LEFT JOIN f USING (m))
-        |SELECT strftime(m, '%Y-%m-%d %H:%M') AS minute, n, amt,
-        |  last_value(amt IGNORE NULLS) OVER (ORDER BY m
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS amt_ffill
-        |FROM g ORDER BY minute""".stripMargin)),
-
-    // GF2: the KEYED gap fill — the form that scales. Each event_type
-    // gets its own dense minute spine over its own [min, max] on day 6,
-    // and the forward-fill window partitions per key, so spine join and
-    // fill both hash-distribute across the cluster instead of the
-    // keyless single-window form gf1 keeps for one bounded series.
-    "gf2_gap_fill_keyed" -> Q(
-      (s, d) => {
-        val perMin = events(s, d).filter(dayofmonth(col("ts")) === 6)
-          .groupBy(col("event_type"), date_trunc("minute", col("ts")).as("m"))
-          .agg(count(lit(1)).cast("long").as("n"),
-            sum((col("event_id") % 1000).cast("int")).cast("long").as("amt"))
-        val filled = graft.ops.TimeSeries.forwardFill(
-          graft.ops.TimeSeries.gapFill(perMin, "m", "1 minute",
-            keys = Seq("event_type")),
-          "m", Seq("amt"), keys = Seq("event_type"))
-        filled.select(col("event_type"),
-            date_format(col("m"), "yyyy-MM-dd HH:mm").as("minute"),
-            coalesce(col("n"), lit(0L)).as("n"), col("amt"), col("amt_ffill"))
-          .orderBy("event_type", "minute")
-      },
-      Some("""WITH f AS (SELECT event_type, date_trunc('minute', ts) AS m,
-        |        CAST(count(*) AS BIGINT) AS n,
-        |        CAST(sum(CAST(event_id % 1000 AS INTEGER)) AS BIGINT) AS amt
-        |      FROM events WHERE date_part('day', ts) = 6 GROUP BY 1, 2),
-        |sp AS (SELECT event_type, unnest(generate_series(lo, hi, INTERVAL 1 MINUTE)) AS m
-        |      FROM (SELECT event_type, min(m) AS lo, max(m) AS hi FROM f GROUP BY 1)),
-        |g AS (SELECT sp.event_type, sp.m, coalesce(f.n, 0) AS n, f.amt
-        |      FROM sp LEFT JOIN f USING (event_type, m))
-        |SELECT event_type, strftime(m, '%Y-%m-%d %H:%M') AS minute, n, amt,
-        |  last_value(amt IGNORE NULLS) OVER (PARTITION BY event_type ORDER BY m
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS amt_ffill
-        |FROM g ORDER BY event_type, minute""".stripMargin)),
-
-    // FZ1: fuzzy entity resolution — every account-string pair within
-    // Levenshtein distance 1, found by deletion-neighborhood blocking
-    // (complete for d=1) + equi-join on variant hash, NOT an n² cross
-    // join. Oracle runs the semantic n² definition — tractable there
-    // because the oracle corpus is small; the Spark plan is the one
-    // that scales.
-    "fz1_fuzzy_join" -> Q(
-      (s, d) => graft.ops.Fuzzy.selfJoinLev1(
-          tx(s, d).select(col("account")), "account")
-        .orderBy("s1", "s2"),
-      Some(s"""$TxCte,
-        |v AS (SELECT DISTINCT account FROM tx)
-        |SELECT a.account AS s1, b.account AS s2,
-        |       CAST(levenshtein(a.account, b.account) AS INTEGER) AS dist
-        |FROM v a, v b
-        |WHERE a.account < b.account AND levenshtein(a.account, b.account) <= 1
-        |ORDER BY s1, s2""".stripMargin)),
-
-    // ER1: end-to-end ENTITY RESOLUTION — TWO blocking families
-    // unioned (the lev-1 deletion neighborhood + char-3-gram blocks,
-    // which catch the transposition/double-edit shapes a deletion
-    // block structurally cannot), one lev<=2 match-verify, and
-    // large-star/small-star connected components assigning every
-    // account string its canonical entity id (min id in the
-    // component). The full record-linkage composition: blocking →
-    // match → cluster, with every stage a bounded equi-join or
-    // O(log n) edge iteration, and the matcher not tied to any single
-    // blocker's recall shape. Oracle = the edge set restated
-    // declaratively ("lev<=1, or lev<=2 sharing a 3-gram") closed by a
-    // recursive CTE.
-    //
-    // Plan note: accounts and pairs PERSIST — accounts feeds four
-    // blocking-index scans plus the vertex/assemble sides, and pairs
-    // seeds the component iteration; without the cache the tx-distinct
-    // subtree recomputes per consumer (measured 10.3 s -> ~4 s at
-    // sf0.1). This corpus's lev<=2 edge set is ~21% dense (236 k edges
-    // / 1 500 accounts, collapsing to one component), so the pair
-    // stage is OUTPUT-bound — a denser blocker would not shrink it
-    // (segment blocking for the long-string sparse regime is
-    // Fuzzy.selfJoinLev, FuzzySpec-covered).
-    "er1_entity_resolution" -> Q(
-      (s, d) => {
-        val accounts = tx(s, d).select(col("account")).distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        def idOf(c: org.apache.spark.sql.Column) =
-          regexp_replace(c, "^user-", "").cast("long")
-        val pairs = graft.ops.Fuzzy.selfJoinFuzzy(accounts, "account", maxDist = 2)
-          .select(idOf(col("s1")).as("d1"), idOf(col("s2")).as("d2"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val verts = accounts.select(idOf(col("account")).as("v"))
-        val cc = graft.ops.Dedup.connectedComponents(verts, pairs)
-        val sizes = cc.groupBy("cluster").agg(count(lit(1)).cast("long").as("csize"))
-        accounts.withColumn("v", idOf(col("account")))
-          .join(cc, "v").join(sizes, "cluster")
-          .select(col("account"), col("cluster").as("entity_id"), col("csize"))
-          .orderBy("account")
-      },
-      Some(s"""${TxCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-        |acc AS (SELECT DISTINCT account, CAST(regexp_replace(account, '^user-', '') AS BIGINT) AS v
-        |        FROM tx),
-        |p AS (SELECT a.v AS v1, b.v AS v2 FROM acc a JOIN acc b
-        |      ON a.account < b.account AND (
-        |        levenshtein(a.account, b.account) <= 1
-        |        OR (levenshtein(a.account, b.account) <= 2
-        |            AND len(list_intersect(
-        |              list_distinct(list_transform(range(1, greatest(len(a.account) - 2, 1) + 1),
-        |                i -> substr(a.account, CAST(i AS INTEGER), 3))),
-        |              list_distinct(list_transform(range(1, greatest(len(b.account) - 2, 1) + 1),
-        |                i -> substr(b.account, CAST(i AS INTEGER), 3))))) > 0))),
-        |edges AS (SELECT v1 AS src, v2 AS dst FROM p
-        |          UNION ALL SELECT v2, v1 FROM p),
-        |reach(v, r) AS (
-        |  SELECT v, v FROM acc
-        |  UNION
-        |  SELECT edges.dst, reach.r FROM reach JOIN edges ON edges.src = reach.v),
-        |cl AS (SELECT v, min(r) AS cluster FROM reach GROUP BY v),
-        |sz AS (SELECT cluster, CAST(count(*) AS BIGINT) AS csize FROM cl GROUP BY cluster)
-        |SELECT acc.account, cl.cluster AS entity_id, sz.csize
-        |FROM acc JOIN cl USING (v) JOIN sz USING (cluster)
-        |ORDER BY acc.account""".stripMargin)),
-
-    // Snapshot time travel: publish v1 and an edited v2 through the
-    // versioned-pointer table, read v1 BY VERSION while the pointer
-    // serves v2, and classify the diff. Proves old snapshots stay
-    // readable and byte-stable after the pointer moves on — the
-    // lakehouse time-travel contract.
-    "vt1_time_travel_diff" -> Q(
-      (s, d) => {
-        import graft.ingest.VersionedDir
-        val dir = scratch("vt1_tbl")
-        val orders = s.read.parquet(s"$d/orders.parquet")
-          .select("o_orderkey", "o_custkey", "o_totalprice")
-        val base = orders.filter(col("o_orderkey") % 4 === 0)
-        VersionedDir.publish(base, dir, 1L)
-        val v2 = base
-          .filter(!(col("o_orderkey") % 36 === 12))                 // deletes
-          .withColumn("o_totalprice",
-            when(col("o_orderkey") % 20 === 0,
-              col("o_totalprice") + 1.0).otherwise(col("o_totalprice"))) // updates
-          .unionByName(orders.filter(col("o_orderkey") % 16 === 1)) // inserts
-        VersionedDir.publish(v2, dir, 2L)
-        val old = s.read.parquet(s"$dir/v=1") // time-travel read of v1
-        val cur = VersionedDir.current(s, dir).get
-        graft.query.QuerySurface.diffClassify(cur, old, Seq("o_orderkey"))
-          .groupBy("status").agg(count(lit(1)).cast("long").as("n"))
-          .orderBy("status")
-      },
-      Some("""WITH c AS (SELECT
-        |  (SELECT count(*) FROM orders WHERE o_orderkey % 16 = 1) AS added,
-        |  (SELECT count(*) FROM orders WHERE o_orderkey % 4 = 0
-        |     AND o_orderkey % 36 = 12) AS removed,
-        |  (SELECT count(*) FROM orders WHERE o_orderkey % 4 = 0
-        |     AND o_orderkey % 20 = 0 AND o_orderkey % 36 != 12) AS changed,
-        |  (SELECT count(*) FROM orders WHERE o_orderkey % 4 = 0) AS base)
-        |SELECT 'added' AS status, CAST(added AS BIGINT) AS n FROM c
-        |UNION ALL SELECT 'changed', CAST(changed AS BIGINT) FROM c
-        |UNION ALL SELECT 'removed', CAST(removed AS BIGINT) FROM c
-        |UNION ALL SELECT 'unchanged', CAST(base - removed - changed AS BIGINT) FROM c
-        |ORDER BY status""".stripMargin)),
-
-    // Blocking-quality diagnostics for er1's multi-blocker: reduction
-    // ratio and pair completeness vs the n² lev<=2 truth on the
-    // account vocabulary. The oracle re-runs the candidate
-    // CONSTRUCTION (deletion variants + 3-grams) declaratively, so a
-    // blocker that silently loses pairs shows up as completeness < 1
-    // in one engine and not the other.
-    // maxVocab 500: at the sf0.01 gate the 150-string vocab takes the
-    // EXACT truth path (the oracle below recomputes the same exact
-    // join), while at sf0.1+ bench scale the ~1.5k vocab exercises the
-    // stratified-sample estimator — the production path for vocabularies
-    // that outgrow n² (FuzzySpec pins estimator convergence).
-    "er2_blocking_quality" -> Q(
-      (s, d) => graft.ops.Fuzzy.blockingQuality(
-          tx(s, d).select(col("account")), "account", maxVocab = 500L)
-        .orderBy("blocker"),
-      Some(s"""$TxCte,
-        |acc AS (SELECT DISTINCT account FROM tx),
-        |del AS (SELECT account, unnest(list_distinct(list_transform(
-        |    range(0, len(account) + 1),
-        |    i -> CASE WHEN i = 0 THEN account
-        |         ELSE substr(account, 1, CAST(i - 1 AS INTEGER))
-        |           || substr(account, CAST(i + 1 AS INTEGER)) END))) AS v
-        |  FROM acc),
-        |dc AS (SELECT DISTINCT a.account AS s1, b.account AS s2
-        |  FROM del a JOIN del b ON a.v = b.v AND a.account < b.account),
-        |gr AS (SELECT account, unnest(list_distinct(list_transform(
-        |    range(1, greatest(len(account) - 2, 1) + 1),
-        |    i -> substr(account, CAST(i AS INTEGER), 3)))) AS g
-        |  FROM acc),
-        |gdf AS (SELECT g, count(*) AS gdf FROM gr GROUP BY 1),
-        |gc AS (SELECT DISTINCT a.account AS s1, b.account AS s2
-        |  FROM gr a JOIN gr b ON a.g = b.g AND a.account < b.account),
-        |gcap AS (SELECT DISTINCT a.account AS s1, b.account AS s2
-        |  FROM gr a JOIN gr b ON a.g = b.g AND a.account < b.account
-        |  JOIN gdf ON gdf.g = a.g AND gdf.gdf <= 30),
-        |cand_full AS (SELECT s1, s2 FROM dc UNION SELECT s1, s2 FROM gc),
-        |cand_cap AS (SELECT s1, s2 FROM dc UNION SELECT s1, s2 FROM gcap),
-        |truth AS (SELECT a.account AS s1, b.account AS s2
-        |  FROM acc a JOIN acc b ON a.account < b.account
-        |  WHERE levenshtein(a.account, b.account) <= 2),
-        |n AS (SELECT CAST(count(*) AS BIGINT) AS ns FROM acc),
-        |m AS (
-        |  SELECT 'union_full' AS blocker,
-        |    (SELECT ns FROM n) AS n_strings,
-        |    (SELECT ns * (ns - 1) // 2 FROM n) AS n_all_pairs,
-        |    (SELECT CAST(count(*) AS BIGINT) FROM cand_full) AS n_candidates,
-        |    (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_truth,
-        |    (SELECT CAST(count(*) AS BIGINT) FROM truth t
-        |       JOIN cand_full c ON c.s1 = t.s1 AND c.s2 = t.s2) AS n_caught
-        |  UNION ALL
-        |  SELECT 'union_dfcap',
-        |    (SELECT ns FROM n),
-        |    (SELECT ns * (ns - 1) // 2 FROM n),
-        |    (SELECT CAST(count(*) AS BIGINT) FROM cand_cap),
-        |    (SELECT CAST(count(*) AS BIGINT) FROM truth),
-        |    (SELECT CAST(count(*) AS BIGINT) FROM truth t
-        |       JOIN cand_cap c ON c.s1 = t.s1 AND c.s2 = t.s2))
-        |SELECT blocker, n_strings, n_all_pairs, n_candidates, n_truth, n_caught,
-        |  round(CAST(n_caught AS DOUBLE) / CAST(n_truth AS DOUBLE), 6) AS pair_completeness,
-        |  round(1.0 - CAST(n_candidates AS DOUBLE) / CAST(n_all_pairs AS DOUBLE), 6) AS reduction_ratio
-        |FROM m ORDER BY blocker""".stripMargin)),
-
     // S10 analog: the reference's raw-SQL read surface
     // (run_athena_query — athena.py:29-64): write a lake slice, register
     // it as a view from its parquet path, and answer an ad-hoc SQL
@@ -2043,166 +985,5 @@ object Queries {
       Some(s"""$TxCte
         |SELECT entity, CAST(count(*) AS BIGINT) AS n, CAST(sum(amount) AS BIGINT) AS amt
         |FROM tx WHERE substr(update_at, 9, 2) = '05'
-        |GROUP BY 1 ORDER BY 1""".stripMargin)),
-
-    // Point-in-time enrichment (backward as-of join): every click gets
-    // the latest at-or-before purchase of the same user. Planned as ONE
-    // key shuffle + window — no join operator (JoinsSpec proves it
-    // structurally). Oracle: DuckDB's native ASOF LEFT JOIN — an
-    // independent as-of implementation, so semantics are cross-checked,
-    // not just round-tripped.
-    "aj1_asof_join" -> Q(
-      (s, d) => {
-        val ev = events(s, d)
-        val clicks = ev.filter(col("event_type") === "click")
-          .select("event_id", "user_id", "ts")
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .groupBy(col("user_id"), col("ts").as("p_ts"))
-          .agg(max(col("event_id")).as("p_event_id"))
-          .select("user_id", "p_ts", "p_event_id")
-        graft.ops.Joins.asofJoin(clicks, purchases, Seq("user_id"), "ts", "p_ts")
-          .select("event_id", "user_id", "ts", "p_event_id", "p_ts")
-          .orderBy("event_id")
-      },
-      Some("""WITH pur AS (SELECT user_id, ts AS p_ts, max(event_id) AS p_event_id
-        |             FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
-        |clk AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click')
-        |SELECT c.event_id, c.user_id, c.ts, p.p_event_id, p.p_ts
-        |FROM clk c ASOF LEFT JOIN pur p
-        |  ON c.user_id = p.user_id AND c.ts >= p.p_ts
-        |ORDER BY c.event_id""".stripMargin)),
-
-    // Forward as-of join: time-to-next-failure — every click gets the
-    // EARLIEST at-or-after error of the same user. Oracle uses a
-    // correlated min() subquery (a third independent formulation).
-    "aj2_asof_forward" -> Q(
-      (s, d) => {
-        val ev = events(s, d)
-        val clicks = ev.filter(col("event_type") === "click")
-          .select("event_id", "user_id", "ts")
-        val errors = ev.filter(col("event_type") === "error")
-          .select(col("user_id"), col("ts").as("next_err_ts")).distinct()
-        graft.ops.Joins.asofJoinForward(clicks, errors, Seq("user_id"), "ts", "next_err_ts")
-          .select("event_id", "user_id", "ts", "next_err_ts")
-          .orderBy("event_id")
-      },
-      Some("""SELECT c.event_id, c.user_id, c.ts,
-        |  (SELECT min(e.ts) FROM events e WHERE e.event_type = 'error'
-        |     AND e.user_id = c.user_id AND e.ts >= c.ts) AS next_err_ts
-        |FROM events c WHERE c.event_type = 'click' ORDER BY c.event_id""".stripMargin)),
-
-    // Interval (range) join, bucketized to an equi-join: clicks falling
-    // inside any 10-minute incident window opened by an error event of
-    // users 0-9. A raw `t BETWEEN start AND end` join would plan as
-    // BroadcastNestedLoop; the bucketed form shuffles on the bucket key
-    // (JoinsSpec proves the equi-join plan structurally).
-    "rj1_range_join" -> Q(
-      (s, d) => {
-        val ev = events(s, d)
-        val points = ev.filter(col("event_type") === "click")
-          .select(col("event_id").as("click_id"), col("user_id").as("click_user"),
-            col("ts").as("click_ts"), unix_micros(col("ts")).as("click_us"))
-        val intervals = ev.filter(col("event_type") === "error" && col("user_id") < 10)
-          .select(col("event_id").as("err_id"), col("ts").as("err_start"),
-            unix_micros(col("ts")).as("start_us"),
-            (unix_micros(col("ts")) + lit(600000000L)).as("end_us"))
-        graft.ops.Joins.rangeJoin(points, intervals,
-            "click_us", "start_us", "end_us", bucketWidth = 600000000L)
-          .select("click_id", "click_user", "click_ts", "err_id", "err_start")
-          .orderBy("click_id", "err_id")
-      },
-      Some("""WITH iv AS (SELECT event_id AS err_id, ts AS err_start,
-        |              ts + INTERVAL 10 MINUTE AS err_end
-        |            FROM events WHERE event_type = 'error' AND user_id < 10),
-        |pt AS (SELECT event_id AS click_id, user_id AS click_user, ts AS click_ts
-        |       FROM events WHERE event_type = 'click')
-        |SELECT click_id, click_user, click_ts, err_id, err_start
-        |FROM pt JOIN iv ON click_ts >= err_start AND click_ts < err_end
-        |ORDER BY click_id, err_id""".stripMargin)),
-
-    // Interval-OVERLAP join (rj1's two-sided sibling): 30-min outage
-    // windows opened by errors vs 10-min activity windows opened by
-    // clicks — all pairs whose windows INTERSECT, not point-in-range.
-    // Both sides replicate into 30-min buckets and meet on bucket
-    // equality; the greatest-start-bucket guard emits each pair exactly
-    // once with no distinct pass (JoinsSpec proves both the law and the
-    // equi-join plan). Oracle is the naive non-equi join.
-    "io1_interval_overlap" -> Q(
-      (s, d) => {
-        val ev = events(s, d)
-        val outages = ev.filter(col("event_type") === "error" && col("user_id") < 30)
-          .select(col("event_id").as("err_id"),
-            unix_micros(col("ts")).as("a_s"),
-            (unix_micros(col("ts")) + lit(1800000000L)).as("a_e"))
-        val sessions = ev.filter(col("event_type") === "click" && col("user_id") < 30)
-          .select(col("event_id").as("click_id"),
-            unix_micros(col("ts")).as("b_s"),
-            (unix_micros(col("ts")) + lit(600000000L)).as("b_e"))
-        graft.ops.Joins.intervalOverlapJoin(outages, sessions,
-            "a_s", "a_e", "b_s", "b_e", bucketWidth = 1800000000L)
-          .select(col("err_id"), col("click_id"),
-            (least(col("a_e"), col("b_e")) - greatest(col("a_s"), col("b_s")))
-              .as("overlap_us"))
-          .orderBy("err_id", "click_id")
-      },
-      Some("""WITH oa AS (SELECT event_id AS err_id, ts AS a_s, ts + INTERVAL 30 MINUTE AS a_e
-        |            FROM events WHERE event_type = 'error' AND user_id < 30),
-        |sb AS (SELECT event_id AS click_id, ts AS b_s, ts + INTERVAL 10 MINUTE AS b_e
-        |       FROM events WHERE event_type = 'click' AND user_id < 30)
-        |SELECT err_id, click_id,
-        |  date_diff('microsecond', greatest(a_s, b_s), least(a_e, b_e)) AS overlap_us
-        |FROM oa JOIN sb ON a_s < b_e AND b_s < a_e
-        |ORDER BY err_id, click_id""".stripMargin)),
-
-    // STREAMING sessionization under the gate: session_window with a
-    // 0 s watermark drains through a parquet append sink; append mode
-    // emits exactly the sessions the final watermark closed
-    // (w_end <= max event time), which is what the oracle recomputes
-    // from the islands form — streaming session semantics themselves
-    // are the law being checked, like t3's closed-window rule.
-    // Single input file = single data batch, so no out-of-order drops
-    // muddy the closed-session predicate.
-    "ses3_stream_sessions" -> Q(
-      (s, d) => withStreamShuffle(s) {
-        import org.apache.spark.sql.streaming.Trigger
-        val ev = events(s, d).select(col("user_id"), col("ts"), col("value"))
-        val srcDir = scratchOnce("ses3_src", d)(
-          ev.coalesce(1).write.mode("overwrite").parquet(_))
-        val outDir = scratch("ses3_out")
-        s.readStream.schema(ev.schema).parquet(srcDir)
-          .withWatermark("ts", "0 seconds")
-          .groupBy(col("user_id"), session_window(col("ts"), "12 hours"))
-          .agg(count(lit(1)).cast("long").as("n_events"),
-            sum(col("value").cast("decimal(18,6)")).cast("double").as("sum_value"))
-          .select(col("user_id"),
-            col("session_window.start").as("w_start"),
-            col("session_window.end").as("w_end"),
-            col("n_events"), col("sum_value"))
-          .writeStream.format("parquet").outputMode("append")
-          .option("path", outDir)
-          .option("checkpointLocation", scratch("ses3_ckpt"))
-          .trigger(Trigger.AvailableNow()).start().awaitTermination()
-        s.read.parquet(outDir).orderBy("user_id", "w_start")
-      },
-      Some("""WITH g AS (
-        |  SELECT user_id, ts, value,
-        |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-        |              OR epoch_us(ts) - lag(epoch_us(ts)) OVER w >= 43200000000
-        |         THEN 1 ELSE 0 END AS is_new
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-        |), s AS (
-        |  SELECT user_id, ts, value,
-        |    sum(is_new) OVER (PARTITION BY user_id ORDER BY ts
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |  FROM g
-        |), agg AS (
-        |  SELECT user_id,
-        |    min(ts) AS w_start,
-        |    max(ts) + INTERVAL 12 HOUR AS w_end,
-        |    CAST(count(*) AS BIGINT) AS n_events,
-        |    CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        |  FROM s GROUP BY user_id, sid)
-        |SELECT user_id, w_start, w_end, n_events, sum_value FROM agg
-        |WHERE w_end <= (SELECT max(ts) FROM events)
-        |ORDER BY user_id, w_start""".stripMargin)))
+        |GROUP BY 1 ORDER BY 1""".stripMargin)))
 }

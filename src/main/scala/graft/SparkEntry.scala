@@ -1,12 +1,12 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  * The actual registry lives in [[Queries]] (CDC pipeline) and
-  * [[QueriesOps]] (LLM-data ops + relational bench suite).
+/** Driver contract (SURVEY.md §7.2). The registry is [[Queries.cdc]]: one
+  * entry per SURVEY §2 operator or CDC-loop step, each with DuckDB oracle
+  * SQL.
   */
 object SparkEntry {
-  private val registry: Seq[(String, Q)] = Queries.cdc ++ QueriesOps.all
+  private val registry: Seq[(String, Q)] = Queries.cdc
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
@@ -17,8 +17,7 @@ object SparkEntry {
     registry.map { case (n, q) => n -> q.fn }.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops
-    * (xxhash64 / seeded-RNG operators) → rows-only check.
+    * the same parquet tables.
     */
   def oracleSql: Map[String, String] =
     registry.collect { case (n, Q(_, Some(sql))) => n -> sql }.toMap

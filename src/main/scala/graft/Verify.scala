@@ -38,8 +38,8 @@ object Verify {
         failed += name
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // release blocks persisted inside the query (ann1/dd3/dd5): a
-      // 66-query session would otherwise accumulate them indefinitely
+      // release blocks persisted inside the query: a session that runs
+      // every registered query would otherwise accumulate them
       spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

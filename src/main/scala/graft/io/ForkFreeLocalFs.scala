@@ -2,11 +2,11 @@ package graft.io
 
 import java.io.FileNotFoundException
 import java.net.URI
-import java.nio.file.{Files, NoSuchFileException}
-import java.nio.file.attribute.PosixFilePermissions
+import java.nio.file.{Files, LinkOption, NoSuchFileException}
+import java.nio.file.attribute.{PosixFileAttributes, PosixFilePermissions}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSLinkResolver, FileStatus, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -15,7 +15,7 @@ import org.apache.hadoop.fs.permission.FsPermission
   * every `mkdirs` and `create`) and stock `getFileLinkStatus` runs
   * `readlink` (several times per `FileContext.rename`). Both go through
   * `java.nio` here and fall back to the stock code for what `java.nio`
-  * cannot express: a sticky bit, a non-POSIX file system, a symlink.
+  * cannot express: a sticky bit, a non-POSIX file system.
   */
 class ForkFreeRawLocalFileSystem extends RawLocalFileSystem {
   override def setPermission(p: Path, permission: FsPermission): Unit =
@@ -29,10 +29,25 @@ class ForkFreeRawLocalFileSystem extends RawLocalFileSystem {
       case _: UnsupportedOperationException => super.setPermission(p, permission)
     }
 
-  // for a path that is not a link the stock code returns getFileStatus too
-  override def getFileLinkStatus(f: Path): FileStatus =
-    if (Files.isSymbolicLink(pathToFile(f).toPath)) super.getFileLinkStatus(f)
-    else getFileStatus(f)
+  // For a path that is not a link the stock code returns getFileStatus
+  // too. A link reports its own attributes (as lstat does) and its target
+  // qualified against the link's directory; the stock code would read the
+  // target by running `readlink` on the path's string form, which for a
+  // `file:` URI names no file, so it reports the link as a plain file.
+  override def getFileLinkStatus(f: Path): FileStatus = {
+    val file = pathToFile(f).toPath
+    if (!Files.isSymbolicLink(file)) getFileStatus(f)
+    else try {
+      val a = Files.readAttributes(file, classOf[PosixFileAttributes], LinkOption.NOFOLLOW_LINKS)
+      val target = FSLinkResolver.qualifySymlinkTarget(getUri, f,
+        new Path(Files.readSymbolicLink(file).toString))
+      new FileStatus(a.size, false, 1, getDefaultBlockSize(f), a.lastModifiedTime.toMillis,
+        a.lastAccessTime.toMillis, FsPermission.valueOf("-" + PosixFilePermissions.toString(a.permissions)),
+        a.owner.getName, a.group.getName, target, f)
+    } catch {
+      case _: UnsupportedOperationException => super.getFileLinkStatus(f)
+    }
+  }
 }
 
 /** The checksummed `file:` `FileSystem` (`.crc` sidecars written and

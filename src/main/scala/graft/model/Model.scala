@@ -20,27 +20,6 @@ final case class Transaction(
     note: String       // the ONLY mutable field
 )
 
-/** Lake row = Transaction + synthetic record key + partition columns
-  * (reference: glue_jobs/initial_load.py:124-153). 13 columns in the
-  * reference (incl. 5 Hudi meta cols); ours carries the 8 user-visible +
-  * 5 derived = 13 too.
-  */
-final case class LakeRow(
-    id: String,
-    account: String,
-    create_at: String,
-    update_at: String,
-    entity: String,
-    amount: Int,
-    is_credit: Int,
-    note: String,
-    create_year: String,
-    create_month: String,
-    create_day: String,
-    create_hour: String,
-    create_minute: String
-)
-
 /** CDC change event as emitted by the stream
   * (reference: lambda_functions/dynamodb_stream_consumer.py:37-49).
   */

@@ -342,7 +342,7 @@ object Curate {
     val bf = benchSh.stat.bloomFilter("sh", math.max(n, 1L), fpp)
     val shingles = array_distinct(Dedup.shingleCol(col(textCol), k))
     val flagged =
-      if (graft.GraftExtensions.available("bloom_any_contain")) {
+      if (graft.functions.GraftExtensions.available("bloom_any_contain")) {
         val bos = new java.io.ByteArrayOutputStream()
         bf.writeTo(bos)
         call_function("bloom_any_contain", lit(bos.toByteArray), shingles)

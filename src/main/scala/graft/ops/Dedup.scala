@@ -26,21 +26,6 @@ object Dedup {
     docs.groupBy(md5(col(textCol)).as("content_hash"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
 
-  /** Incremental (cross-corpus) exact dedup: drop every delta document
-    * whose content already exists in the base corpus — the operation an
-    * incremental training-data refresh runs (new crawl vs the corpus
-    * already curated). Anti-join on the 128-bit content hash: the base
-    * side reduces to DISTINCT hashes first (map-side combinable), so
-    * only ~(n_base × 32B) of hashes cross the exchange and the delta's
-    * text never shuffles at all; with a small base-hash set the
-    * anti-join broadcasts.
-    */
-  def dedupAgainst(delta: DataFrame, base: DataFrame,
-                   textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    delta.withColumn("__h", md5(col(textCol)))
-      .join(base.select(md5(col(textCol)).as("__h")).distinct(), Seq("__h"), "left_anti")
-      .drop("__h")
-
   /** Exact n-gram (token-set) Jaccard similarity for all pairs above a
     * threshold, via an inverted-index join on tokens. Correct but
     * O(sum over tokens of df(token)²) — the verification baseline;
@@ -509,7 +494,7 @@ object Dedup {
                         hashFn: Column => Column = xxShingleHash): DataFrame = {
     val hashes = transform(array_distinct(shingleCol(col(textCol), shingleK)),
       x => hashFn(x))
-    if (graft.GraftExtensions.available("minhash_sigs"))
+    if (graft.functions.GraftExtensions.available("minhash_sigs"))
       docs.select(col(idCol).as("d"),
         call_function("minhash_sigs", hashes, lit(numHashes), lit(seed)).as("sig"))
     else {
@@ -596,87 +581,6 @@ object Dedup {
           sequence(lit(0), lit(bands - 1)),
           b => bandHashFn(concat_ws(",", slice(col("sig"), b * rpb + 1, lit(rpb)))))))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bh")
-  }
-
-  /** Incremental NEAR-dup pairs of a delta against a PERSISTED base
-    * signature table — the dd8 incremental pattern lifted from exact
-    * hashes to MinHash: the base corpus is never rescanned and never
-    * re-signed; only its (doc, sig) snapshot (64 longs/doc, ~3 orders
-    * smaller than text) participates.
-    *
-    * `baseSigs` is the signature table (d, sig) — typically
-    * [[graft.ingest.VersionedDir.current]] of a store that
-    * [[graft.ingest.VersionedDir.publish]] wrote at base-corpus build
-    * time. The delta is signed HERE (one narrow codegen pass over delta
-    * text only), band-joined against the base bands (ids-only shuffle),
-    * and candidates are verified by SIGNATURE AGREEMENT — the fraction
-    * of equal signature slots, the standard unbiased Jaccard estimator,
-    * computed in-row from the two sig arrays (exact integer compares,
-    * so any engine reproduces it bit for bit). Base text is not
-    * available by design, so verification is estimator-based — at the
-    * default 64 hashes the estimator's σ ≈ 0.06, and the J≥0.9 dup
-    * density this targets sits far above any sane `estThreshold`.
-    *
-    * Output: (d1 = delta id, d2 = base id, est).
-    */
-  def incrementalNearDupPairs(delta: DataFrame, baseSigs: DataFrame,
-                              estThreshold: Double = 0.5,
-                              numHashes: Int = 64, bands: Int = 16,
-                              shingleK: Int = 3,
-                              textCol: String = "text", idCol: String = "doc_id",
-                              hashFn: Column => Column = xxShingleHash,
-                              bandHashFn: Column => Column = c => xxhash64(c)): DataFrame = {
-    val dsig = minhashSignatures(delta, numHashes, shingleK, textCol, idCol,
-      hashFn = hashFn)
-    sigAgreementPairs(dsig, baseSigs, estThreshold, numHashes, bands, bandHashFn)
-  }
-
-  /** Near-dup pairs BETWEEN two signature tables (each `(d, sig)` with
-    * `sig: array<bigint>` of length numHashes), verified by signature
-    * AGREEMENT — the fraction of equal slots, the standard unbiased
-    * Jaccard estimator — computed in-row from the two arrays (exact
-    * integer compares, reproducible by any engine). Candidates come
-    * from the banded equi-join (ids only cross the exchange); rows
-    * with `d1 == d2` are excluded so a table joined against a store
-    * that already contains it (a replayed epoch) never reports
-    * self-pairs. `ordered = true` restricts to `d1 < d2` — the
-    * SELF-join form for intra-batch pairs.
-    */
-  def sigAgreementPairs(sigA: DataFrame, sigB: DataFrame,
-                        estThreshold: Double = 0.5,
-                        numHashes: Int = 64, bands: Int = 16,
-                        bandHashFn: Column => Column = c => xxhash64(c),
-                        ordered: Boolean = false): DataFrame = {
-    val idCond = if (ordered) col("a.d") < col("b.d") else col("a.d") =!= col("b.d")
-    val cand = bandsOfSignatures(sigA, numHashes, bands, bandHashFn).as("a")
-      .join(bandsOfSignatures(sigB, numHashes, bands, bandHashFn).as("b"),
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") && idCond)
-      .select(col("a.d").as("d1"), col("b.d").as("d2"))
-      .dropDuplicates("d1", "d2")
-    cand
-      .join(sigA.select(col("d").as("d1"), col("sig").as("s1")), "d1")
-      .join(sigB.select(col("d").as("d2"), col("sig").as("s2")), "d2")
-      .withColumn("est",
-        aggregate(zip_with(col("s1"), col("s2"),
-            (x, y) => when(x === y, lit(1)).otherwise(lit(0))),
-          lit(0), (acc, v) => acc + v).cast("double") / lit(numHashes.toDouble))
-      .filter(col("est") >= estThreshold)
-      .select(col("d1"), col("d2"), col("est"))
-  }
-
-  /** The incremental dedup DECISION: delta docs that are near-dups of
-    * nothing in the persisted base signature table.
-    */
-  def dedupDeltaAgainstSignatures(delta: DataFrame, baseSigs: DataFrame,
-                                  estThreshold: Double = 0.5,
-                                  numHashes: Int = 64, bands: Int = 16,
-                                  shingleK: Int = 3,
-                                  textCol: String = "text", idCol: String = "doc_id",
-                                  hashFn: Column => Column = xxShingleHash,
-                                  bandHashFn: Column => Column = c => xxhash64(c)): DataFrame = {
-    val hits = incrementalNearDupPairs(delta, baseSigs, estThreshold,
-      numHashes, bands, shingleK, textCol, idCol, hashFn, bandHashFn)
-    delta.join(hits.select(col("d1").as(idCol)).distinct(), Seq(idCol), "left_anti")
   }
 
   /** [[minhashLshPairs]] with every hash md5-derived ([[md5Hash60]] for
@@ -1091,7 +995,7 @@ object Dedup {
   def simhash(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id",
               tokenHash: Column => Column = c => xxhash64(c)): DataFrame = {
     val hashes = transform(tokens(col(textCol)), t => tokenHash(t))
-    if (graft.GraftExtensions.available("simhash64"))
+    if (graft.functions.GraftExtensions.available("simhash64"))
       docs.select(col(idCol).as("d"), call_function("simhash64", hashes).as("simhash"))
     else
       docs.select(col(idCol).as("d"), hashes.as("hs"))
@@ -1111,26 +1015,6 @@ object Dedup {
         (acc, h) => acc + (shiftright(h, b).bitwiseAND(lit(1L)) * 2 - 1))
       when(bitSum > 0, lit(1L << b)).otherwise(lit(0L))
     }.reduce((x, y) => x.bitwiseOR(y))
-
-  /** Per-doc cross-check of the native [[graft.functions.SimHash64]]
-    * expression against [[simhashPackedBuiltin]] on identical token
-    * hashes: `(d, sh_native, sh_builtin)`. On sessions without the
-    * extension the native column degrades to the builtin (trivially
-    * equal — the guarded-fallback convention); with it, any codegen bug
-    * in the fused expression surfaces as a row where the columns differ.
-    */
-  def simhashImplAgreement(docs: DataFrame, textCol: String = "text",
-                           idCol: String = "doc_id",
-                           tokenHash: Column => Column = c => xxhash64(c)): DataFrame = {
-    val hashes = transform(tokens(col(textCol)), t => tokenHash(t))
-    val builtin = simhashPackedBuiltin(col("hs"))
-    val native =
-      if (graft.GraftExtensions.available("simhash64"))
-        call_function("simhash64", col("hs"))
-      else builtin
-    docs.select(col(idCol).as("d"), hashes.as("hs"))
-      .select(col("d"), native.as("sh_native"), builtin.as("sh_builtin"))
-  }
 
   /** SimHash near-dup pairs with Hamming distance <= maxDist (< 16):
     * pigeonhole over four 16-bit chunks — pairs within distance 3 must
@@ -1155,22 +1039,12 @@ object Dedup {
       .filter(col("hamming") <= maxDist)
   }
 
-  /** [[simhashPairs]] with [[md5Hash60]] token hashes — effectively a
-    * 60-bit SimHash (the top 4 bits of every token hash are zero, so
-    * the top 4 simhash bits are always clear, identically in both
-    * engines), fully recomputable by the DuckDB oracle bit by bit.
-    */
-  def simhashPairsPortable(docs: DataFrame, maxDist: Int = 3,
-                           textCol: String = "text",
-                           idCol: String = "doc_id"): DataFrame =
-    simhashPairs(docs, maxDist, textCol, idCol, tokenHash = md5Hash60)
-
   /** Fuzzy decontamination — the near-duplicate contamination that
     * exact n-gram overlap ([[graft.ops.Curate]] decontaminate / dc1–
     * dc4) misses: an eval document lightly paraphrased or
     * whitespace-mangled into the train set shares few exact 8-grams
-    * but sits within a few SimHash bits. Cross-corpus form of
-    * [[simhashPairsPortable]]: both sides hash to the portable 60-bit
+    * but sits within a few SimHash bits. Cross-corpus only: both sides
+    * hash to the portable 60-bit
     * SimHash, pigeonhole over four 16-bit chunks (hamming ≤ 3 ⟹ at
     * least one agreeing chunk), and ONLY train×eval candidates join.
     * Emits each contaminated train doc with its match count and

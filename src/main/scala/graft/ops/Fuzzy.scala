@@ -486,7 +486,7 @@ object Fuzzy {
     * the guarded-fallback pattern of the other native functions).
     */
   def jaroWinklerCol(a: Column, b: Column): Column =
-    if (graft.GraftExtensions.available("jaro_winkler"))
+    if (graft.functions.GraftExtensions.available("jaro_winkler"))
       graft.functions.JaroWinkler.jaro_winkler(a, b)
     else org.apache.spark.sql.functions.udf((x: String, y: String) =>
       graft.functions.JaroWinkler.similarity(

@@ -117,75 +117,6 @@ object Graph {
     pr.select(col("v"), col("pr")) // final round stays persisted for the caller
   }
 
-  /** One [[pageRank]] round as a LAZY plan (unpersisted), exposed for
-    * the plan gate and the r16 optimization before/after evidence:
-    * the contrib join + dangling-mass side + teleport projection the
-    * loop materializes each round.
-    */
-  private[graft] def pageRankRoundForPlan(edges: DataFrame): DataFrame = {
-    val ed = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .filter(col("src") =!= col("dst")).distinct()
-    val deg = ed.groupBy("src").agg(count(lit(1)).cast("double").as("od"))
-    val edW = ed.join(deg, "src").repartition(col("src"))
-    val nodes = ed.select(col("src").as("v"))
-      .union(ed.select(col("dst").as("v"))).distinct()
-      .join(deg.select(col("src").as("v"), lit(true).as("__o")), Seq("v"), "left")
-      .select(col("v"), col("__o").isNull.as("dang"))
-    val pr = nodes.select(col("v"), col("dang"),
-      (lit(1.0) / lit(2.0)).as("pr"))
-    val contrib = edW.join(pr, edW("src") === pr("v"))
-      .groupBy(col("dst").as("cv"))
-      .agg(sum(col("pr") / col("od")).as("contrib"))
-    // dangling mass is a driver literal fed by the previous round's
-    // observed metric; the observe node below is the round's collector
-    nodes.join(contrib, nodes("v") === contrib("cv"), "left")
-      .select(nodes("v"), nodes("dang"),
-        (lit((1.0 - 0.85) / 2.0) + lit(0.85) *
-          (coalesce(col("contrib"), lit(0.0)) + lit(0.25))).as("pr"))
-      .observe(org.apache.spark.sql.Observation(),
-        coalesce(sum(when(col("dang"), col("pr")).otherwise(lit(0.0))),
-          lit(0.0)).as("mass"))
-  }
-
-  /** One [[hits]] round (the authority leg + its L1 normalization) as a
-    * LAZY plan — r16 optimization evidence, same contract as
-    * [[pageRankRoundForPlan]].
-    */
-  private[graft] def hitsRoundForPlan(edges: DataFrame): DataFrame = {
-    val ed = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .filter(col("src") =!= col("dst")).distinct().repartition(col("src"))
-    val nodes = ed.select(col("src").as("v"))
-      .union(ed.select(col("dst").as("v"))).distinct()
-    val hub = nodes.withColumn("h", lit(1.0))
-    val raw = ed.join(hub, ed("src") === hub("v"))
-      .groupBy(col("dst").as("av")).agg(sum(col("h")).as("__r"))
-    val full = nodes.join(raw, nodes("v") === raw("av"), "left")
-      .select(nodes("v"), coalesce(col("__r"), lit(0.0)).as("__r"))
-    val tot = full.agg(sum(col("__r")).as("__t"))
-    full.crossJoin(broadcast(tot))
-      .select(col("v"), (col("__r") / col("__t")).as("a"))
-  }
-
-  /** One [[labelPropagation]] round as a LAZY plan — r16 optimization
-    * evidence, same contract as [[pageRankRoundForPlan]].
-    */
-  private[graft] def lpRoundForPlan(edges: DataFrame): DataFrame = {
-    val dir = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .filter(col("src") =!= col("dst"))
-    val adj = dir.select(col("src").as("a"), col("dst").as("b"))
-      .union(dir.select(col("dst").as("a"), col("src").as("b")))
-      .distinct().repartition(col("b"))
-    val lab = adj.select(col("a").as("v")).distinct()
-      .withColumn("lbl", col("v"))
-    adj.join(lab, adj("b") === lab("v"))
-      .repartition(col("a"))
-      .groupBy(col("a"), col("lbl")).agg(count(lit(1)).as("c"))
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col("a")).orderBy(col("c").desc, col("lbl").asc)))
-      .filter(col("__rn") === 1)
-      .select(col("a").as("v"), col("lbl"))
-  }
-
   /** Personalized PageRank (Haveliwala, WWW'02): [[pageRank]] with the
     * teleport AND the dangling mass restarting on a SEED SET instead of
     * uniformly — `pr'(v) = (1−d)·s(v)/|S| + d·(Σ_in pr/outdeg +
@@ -743,9 +674,6 @@ object Graph {
     pins.foreach(_.unpersist(false))
     out
   }
-
-  private[graft] def localClusteringHistogramForPlan(edges: DataFrame): DataFrame =
-    localClusteringHistogramCore(edges)._1
 
   /** The lazy core of [[localClusteringHistogram]]: returns the
     * histogram frame pre-localCheckpoint plus the internal pins to

@@ -166,7 +166,7 @@ object Joins {
     val n = keys.count() // one tiny job over the dimension only
     val bf = keys.stat.bloomFilter(dimKey, math.max(n, 1L), fpp)
     val keep =
-      if (graft.GraftExtensions.available("bloom_contains_long")) {
+      if (graft.functions.GraftExtensions.available("bloom_contains_long")) {
         val bos = new java.io.ByteArrayOutputStream()
         bf.writeTo(bos)
         call_function("bloom_contains_long", lit(bos.toByteArray),

@@ -944,24 +944,6 @@ object Multimodal {
         col("y_sum"), col("delta"))
   }
 
-  /** Media table of REAL Y4M videos synthesized from the documents
-    * fixture.
-    */
-  def y4mFromDocuments(docs: DataFrame): Dataset[MediaRow] = {
-    implicit val encIn = Encoders.product[DocText]
-    implicit val encOut = Encoders.product[MediaRow]
-    docs.select(col("doc_id"), col("text")).as[DocText]
-      .map(r => MediaRow(r.doc_id, "video", makeY4m(r.doc_id, r.text.getBytes("UTF-8"))))
-  }
-
-  /** Media table of REAL WAVs synthesized from the documents fixture. */
-  def wavFromDocuments(docs: DataFrame): Dataset[MediaRow] = {
-    implicit val encIn = Encoders.product[DocText]
-    implicit val encOut = Encoders.product[MediaRow]
-    docs.select(col("doc_id"), col("text")).as[DocText]
-      .map(r => MediaRow(r.doc_id, "audio", makeWav(r.doc_id, r.text.getBytes("UTF-8"))))
-  }
-
   /** Media table of REAL P6 images synthesized from the documents
     * fixture (same hash-spread layout notes as [[mediaFromDocuments]]).
     */
@@ -974,19 +956,4 @@ object Multimodal {
       .map(r => MediaRow(r.doc_id, "image", makePpm(r.doc_id, r.text.getBytes("UTF-8"))))
   }
 
-  /** Frame sampling: explode each payload into per-frame rows (1 KiB
-    * chunks), keeping every `stride`-th frame — the Spark-side shape of
-    * video frame-sampling (real decode stubbed).
-    */
-  def sampleFrames(media: Dataset[MediaRow], stride: Int = 2): DataFrame =
-    media.toDF()
-      .withColumn("n_frames",
-        ((length(col("payload")) + 1023) / 1024).cast("int"))
-      .withColumn("frame_idx",
-        explode(filter(sequence(lit(0), col("n_frames") - 1),
-          i => i % stride === 0)))
-      .withColumn("frame_bytes",
-        col("payload").substr(col("frame_idx") * 1024 + 1, lit(1024)))
-      .select(col("doc_id"), col("media_type"), col("frame_idx"),
-        length(col("frame_bytes")).as("frame_n_bytes"))
 }

@@ -62,7 +62,7 @@ object Pca {
     val upExpr = s"flatten(transform(sequence(0, ${dim - 1}), " +
       s"i -> transform(sequence(i, ${dim - 1}), j -> q[i] * q[j])))"
     val up =
-      if (graft.GraftExtensions.available("tri_products"))
+      if (graft.functions.GraftExtensions.available("tri_products"))
         graft.functions.TriProducts.tri_products(col("q"))
       else expr(upExpr)
     val s2 = q.select(posexplode(up).as(Seq("pos", "p")))
@@ -296,11 +296,6 @@ object Pca {
         (expr("sa div n_a") - expr("sb div n_b")).as("s"),
         col("n_a"), col("n_b"))
   }
-
-  private[graft] def weatSwForPlan(vecs: DataFrame, xLabel: Long,
-                                   yLabel: Long, aLabel: Long,
-                                   bLabel: Long): DataFrame =
-    weatSw(vecs, xLabel, yLabel, aLabel, bLabel)
 
   def weatTest(vecs: DataFrame, xLabel: Long, yLabel: Long,
                aLabel: Long, bLabel: Long, reps: Int = 64,

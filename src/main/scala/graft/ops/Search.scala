@@ -211,7 +211,7 @@ object Search {
     // the hot path (PlanSpec asserts). Broadcast+UDF remains the
     // fallback on sessions built without GraftExtensions.
     val est: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-      if (graft.GraftExtensions.available("cms_estimate")) {
+      if (graft.functions.GraftExtensions.available("cms_estimate")) {
         val bos = new java.io.ByteArrayOutputStream()
         cms.writeTo(bos)
         val bytes = bos.toByteArray

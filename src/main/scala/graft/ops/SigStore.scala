@@ -6,9 +6,9 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.storage.StorageLevel
 import graft.ingest.VersionedDir
 
-/** Continuously-maintained MinHash signature store: the incremental
-  * near-dup dedup of [[Dedup.dedupDeltaAgainstSignatures]] lifted from
-  * a one-shot delta to an EPOCH LOOP — the operation a continuously
+/** Continuously-maintained MinHash signature store: incremental
+  * near-dup dedup of each new batch against persisted signatures, run
+  * as an EPOCH LOOP — the operation a continuously
   * refreshed training corpus runs. Each epoch's batch dedups against
   * the persisted signature snapshot AND against itself, survivors'
   * signatures append to the store, and the store advances one
@@ -20,7 +20,7 @@ import graft.ingest.VersionedDir
   *
   *  - CROSS: a batch doc with any signature-agreement hit (est >=
   *    threshold) against the CURRENT store is dropped. Self-id hits
-  *    are excluded ([[Dedup.sigAgreementPairs]]), which is what makes
+  *    are excluded, which is what makes
   *    a replayed epoch see its own prior append harmlessly.
   *  - INTRA: for batch-internal pairs (d1 < d2, est >= threshold) the
   *    LATER id drops — the same one-pass greedy policy as
@@ -76,7 +76,7 @@ object SigStore {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val store = VersionedDir.current(spark, storeDir)
     // CROSS and INTRA fused into ONE band join (round-12 profile: the
-    // two sigAgreementPairs calls were ~40% of the epoch — each banded
+    // two signature-agreement joins were ~40% of the epoch — each banded
     // bsig separately and each paid its own candidate-dedup shuffle).
     // The reference side is store ∪ batch with a store flag carried
     // THROUGH the banding; the join condition encodes both policies at

@@ -24,7 +24,7 @@ object Similarity {
     * on sessions built without GraftExtensions.
     */
   def dot(a: Column, b: Column): Column =
-    if (graft.GraftExtensions.available("vector_dot"))
+    if (graft.functions.GraftExtensions.available("vector_dot"))
       graft.functions.VectorDot.vector_dot(a, b)
     else dotHof(a, b)
 
@@ -346,11 +346,9 @@ object Similarity {
   private def hyperplanes(nPlanes: Int, dim: Int, seed: Long): Seq[Column] =
     planeSigns(nPlanes, dim, seed).map(typedlit(_))
 
-  /** The raw ±1 plane components behind [[srpBucket]] — public so the
-    * DuckDB oracle generator (graft.OracleGen) can serialize the SAME
-    * literals into SQL and recompute buckets exactly. Element order is
-    * the seeded-RNG call order; both consumers share one definition so
-    * they cannot drift.
+  /** The raw ±1 plane components behind [[srpBucket]] — public so a
+    * test or an external oracle can recompute buckets from the SAME
+    * literals. Element order is the seeded-RNG call order.
     */
   def planeSigns(nPlanes: Int, dim: Int, seed: Long): Seq[IndexedSeq[Double]] = {
     val r = new Random(seed)
@@ -744,88 +742,6 @@ object Similarity {
       .select(col("q_id"), col("n_id"), col("rank"), col("sim"))
   }
 
-  /** Embedding-space outlier report — the vector-modality member of
-    * the outlier family (an1/an2 z-score scalar series; this scores
-    * vectors): each embedding's cosine DISTANCE to its own nearest
-    * coarse centroid, z-scored over the corpus, top `topK` emitted.
-    * The data-cleaning gate that surfaces corrupt / mislabeled /
-    * off-manifold vectors before they enter training or ANN indexes.
-    *
-    * Determinism: the per-row distance quantizes to integer
-    * micro-units, corpus moments are EXACT sums over those integers
-    * (the long Σd and a decimal(38,0) Σd² — order-free, no cross-row
-    * float accumulation; decimal because Σd² overflows a long at
-    * ~10⁹ rows), and z is a closed-form double over the two exact
-    * integers. Cell choice reuses [[ivfTopK]]'s argmax (ties to the
-    * larger cell id via struct ordering).
-    *
-    * Scale: one narrow corpus pass over plan-time centroid literals +
-    * one combinable 1-row moment aggregate broadcast back + a
-    * distributed TakeOrdered — no shuffle of vectors at all.
-    */
-  /** Distributed Lloyd k-means with a FIXED round count and
-    * deterministic init — the third trainer shape beside the
-    * closed-form NB pair and the GD loop: per round one narrow
-    * plan-time-literal assignment pass (no shuffle of vectors) and one
-    * combinable (cluster, dim) moment shuffle, then an O(k·dim)
-    * driver update — the exact pattern MLlib's KMeans runs, made
-    * oracle-checkable by pinning init and rounds (the oracle unrolls
-    * every assignment and centroid update). Empty clusters keep their
-    * previous centroid.
-    *
-    * Returns (cluster, n_members, dim, c_val): the final centroids
-    * with the last assignment's cluster sizes.
-    */
-  def lloydRounds(corpus: DataFrame, initCentroids: Seq[Centroid],
-                  rounds: Int = 2, idCol: String = "vec_id",
-                  vecCol: String = "embedding"): DataFrame = {
-    require(initCentroids.nonEmpty && rounds > 0, "need centroids and rounds")
-    val vd = col(vecCol).cast("array<double>")
-    var cents: Seq[(Long, Array[Double])] =
-      initCentroids.map(c => c.id -> c.vec)
-    def assignCol(cs: Seq[(Long, Array[Double])]): Column = {
-      val structs = array(cs.map { case (cid, cv) =>
-        val cl = typedlit(cv.toIndexedSeq)
-        // squared L2 as an IN-ORDER per-dim fold (oracle-mirrored)
-        val d2 = aggregate(zip_with(vd, cl, (x, c) => (x - c) * (x - c)),
-          lit(0.0), (a, t) => a + t)
-        struct(d2.as("d"), lit(cid).as("cid"))
-      }: _*)
-      // min (dist, cid) struct: ties to the SMALLER cluster id
-      array_min(structs).getField("cid")
-    }
-    var assigned: DataFrame = corpus.limit(0).select(col(idCol),
-      lit(0L).as("cluster")) // replaced in round 1
-    for (_ <- 1 to rounds) {
-      assigned = corpus.select(col(idCol), vd.as("__v"),
-        assignCol(cents).as("cluster"))
-      val stats = assigned
-        .select(col("cluster"), posexplode(col("__v")).as(Seq("dim", "x")))
-        .groupBy(col("cluster"), col("dim")).agg(avg(col("x")).as("m"))
-        .collect()
-      val byC = stats.groupBy(_.getLong(0))
-      cents = cents.map { case (cid, old) =>
-        byC.get(cid) match {
-          case Some(rows) =>
-            val m = old.clone()
-            rows.foreach(r => m(r.getInt(1)) = r.getDouble(2))
-            cid -> m
-          case None => cid -> old
-        }
-      }
-    }
-    val sizes = assigned.groupBy(col("cluster"))
-      .agg(count(lit(1)).cast("long").as("n_members"))
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val centDf = cents.flatMap { case (cid, v) =>
-      v.zipWithIndex.map { case (cv, d) => (cid, d, cv) }
-    }.toDF("cluster", "dim", "c_val")
-    centDf.join(sizes, Seq("cluster"), "left")
-      .select(col("cluster"), coalesce(col("n_members"), lit(0L)).as("n_members"),
-        col("dim"), col("c_val"))
-  }
-
   /** Hubness report of the ANN top-k graph (Radovanović et al.
     * JMLR'10): the k-occurrence distribution — how often each vector
     * appears in OTHER vectors' top-k — from exact integer moments:
@@ -942,21 +858,6 @@ object Similarity {
     * squared norm.
     */
   final case class PqCode(sub: Int, code: Int, vec: Array[Double], cc: Double)
-
-  /** Deterministic data-independent PQ codebooks (seeded Gaussians,
-    * the [[fixedCentroids]] discipline): every component is a
-    * plan-time literal an external SQL engine can be handed verbatim —
-    * what lets the DuckDB oracle value-check the PQ query end to end.
-    * Trained codebooks come from [[pqCodebooks]].
-    */
-  def fixedPqCodebooks(m: Int, ks: Int, subDim: Int, seed: Long = 23L): Seq[Seq[PqCode]] =
-    (0 until m).map { j =>
-      val r = new Random(seed + j)
-      (0 until ks).map { c =>
-        val v = Array.fill(subDim)(r.nextGaussian() * 0.5)
-        PqCode(j, c, v, v.map(x => x * x).sum)
-      }
-    }
 
   /** Trained PQ codebooks: plain (non-spherical) Lloyd's k-means per
     * SUBSPACE over a deterministic hash-ordered driver-side sample —
@@ -1358,97 +1259,6 @@ object Similarity {
       .select("d1", "d2", "cosine")
   }
 
-  def quantizeInt8(vectors: DataFrame, vecCol: String = "embedding",
-                   idCol: String = "vec_id"): DataFrame = {
-    val xd = transform(col(vecCol), v => v.cast("double"))
-    vectors
-      .withColumn("scale", aggregate(xd, lit(0.0), (a, b) => greatest(a, abs(b))))
-      .withColumn("qvec", when(col("scale") === 0.0,
-          transform(col(vecCol), _ => lit(0)))
-        .otherwise(transform(col(vecCol),
-          v => round(v.cast("double") / col("scale") * 127.0).cast("int"))))
-      .withColumn("max_err", when(col("scale") === 0.0, lit(0.0))
-        .otherwise(aggregate(
-          zip_with(col("qvec"), col(vecCol),
-            (q, x) => abs(q.cast("double") * col("scale") / 127.0 - x.cast("double"))),
-          lit(0.0), (a, b) => greatest(a, b))))
-      .withColumn("err_ok", col("max_err") <= col("scale") / 253.0)
-  }
-
-  /** The 16 NF4 levels (Dettmers et al., NeurIPS'23 "QLoRA" §3 /
-    * bitsandbytes): equal-mass quantiles of N(0, 1) rescaled to
-    * [−1, 1] — the information-theoretically-motivated nonuniform
-    * 4-bit codebook for normally-distributed weights/activations.
-    */
-  val Nf4Levels: Seq[Double] = Seq(
-    -1.0, -0.6961928009986877, -0.5250730514526367, -0.39491748809814453,
-    -0.28444138169288635, -0.18477343022823334, -0.09105003625154495, 0.0,
-    0.07958029955625534, 0.16093020141124725, 0.24611230194568634,
-    0.33791524171829224, 0.44070982933044434, 0.5626170039176941,
-    0.7229568362236023, 1.0)
-
-  /** NF4 4-bit quantization QUALITY report: quantize each vector to
-    * the nearest NF4 level at its absmax scale (the QLoRA storage
-    * format, 16× smaller than fp32 beside [[quantizeInt8]]'s 4×),
-    * dequantize, and report per label the exact reconstruction MSE
-    * and mean cosine retention — the decide-before-you-ship numbers
-    * for a 4-bit embedding/weight store. Nonuniform levels beat int4's
-    * uniform grid exactly when values are bell-shaped; this report is
-    * how you verify that on YOUR distribution.
-    *
-    * Determinism: the level argmin is an `array_min` over
-    * (|diff|, idx) structs of plan-time level literals (ties to the
-    * lower code); per-dim squared errors and per-vector cosines are
-    * fixed folds pico/nano-quantized before exact integer means.
-    *
-    * Scale: ONE narrow in-row pass (16-way argmin per dim) + a
-    * labels-bounded rollup. Nothing leaves the row until the final
-    * combinable aggregate.
-    */
-  def nf4QuantReport(vectors: DataFrame, labelCol: String = "label",
-                     vecCol: String = "embedding"): DataFrame = {
-    val dec = (c: Column) => c.cast("decimal(38,0)")
-    val xd = transform(col(vecCol), v => v.cast("double"))
-    val levelArr = typedlit(Nf4Levels.toIndexedSeq)
-    val scaled = vectors
-      .withColumn("xd", xd)
-      .withColumn("scale", aggregate(col("xd"), lit(0.0),
-        (a, b) => greatest(a, abs(b))))
-      .withColumn("deq", when(col("scale") === 0.0,
-          transform(col("xd"), _ => lit(0.0)))
-        .otherwise(transform(col("xd"), v => {
-          val structs = transform(sequence(lit(0), lit(Nf4Levels.size - 1)),
-            i => struct(abs(v / col("scale") - element_at(levelArr, i + 1))
-              .as("d"), i.as("i")))
-          element_at(levelArr, array_min(structs).getField("i") + 1) *
-            col("scale")
-        })))
-      .withColumn("se_pico", expr(
-        """aggregate(zip_with(xd, deq, (x, q) -> (x - q) * (x - q)),
-          |  CAST(0.0 AS DOUBLE), (acc, t) -> acc + t)""".stripMargin))
-      .withColumn("se_pico",
-        floor(col("se_pico") * lit(1e12) + lit(0.5)).cast("long"))
-      .withColumn("dot_xq", expr(
-        """aggregate(zip_with(xd, deq, (x, q) -> x * q),
-          |  CAST(0.0 AS DOUBLE), (acc, t) -> acc + t)""".stripMargin))
-      .withColumn("nx", sqrt(expr(
-        """aggregate(zip_with(xd, xd, (x, q) -> x * q),
-          |  CAST(0.0 AS DOUBLE), (acc, t) -> acc + t)""".stripMargin)))
-      .withColumn("nq", sqrt(expr(
-        """aggregate(zip_with(deq, deq, (x, q) -> x * q),
-          |  CAST(0.0 AS DOUBLE), (acc, t) -> acc + t)""".stripMargin)))
-      .withColumn("cos_nano", when(col("nx") * col("nq") === 0.0, lit(0L))
-        .otherwise(floor(col("dot_xq") / (col("nx") * col("nq")) * lit(1e9) +
-          lit(0.5)).cast("long")))
-    scaled.groupBy(col(labelCol).cast("long").as("label"))
-      .agg(count(lit(1)).cast("long").as("n"),
-        sum(dec(col("se_pico"))).as("ssp"),
-        sum(dec(col("cos_nano"))).as("scn"))
-      .select(col("label"), col("n"),
-        expr("CAST(ssp div n AS BIGINT)").as("mse_pico"),
-        expr("CAST(scn div n AS BIGINT)").as("mean_cos_nano"))
-  }
-
   /** Per-dimension standardization (z-scoring) of an embedding column —
     * the feature-scaling pass before distance-based downstream ML
     * (clustering, PQ training, linear probes). Dims with zero variance
@@ -1705,8 +1515,8 @@ object Similarity {
     * negative = misassigned mass. Evaluates any published codebook
     * (the km1 fit, a PQ codebook, an IVF coarse quantizer).
     *
-    * Determinism: distances are the same in-order per-dim folds as
-    * [[lloydRounds]] (plan-time centroid literals); own/second pick is
+    * Determinism: distances are in-order per-dim folds against
+    * plan-time centroid literals; own/second pick is
     * an `array_sort` on (d², cid) structs — total order, no float
     * round-trip; each point's s pico-quantizes before the order-free
     * per-cluster sum.
@@ -1832,7 +1642,7 @@ object Similarity {
       expr(normsExpr(vecCol)).as("q_norms")))
     // zero-norm guard: an all-zero sub-vector would make the cosine
     // 0/0 = NaN and poison the whole MaxSim sum; treat it as cosine 0
-    // (the quantizeInt8 scale=0 convention). Same CASE on both engines.
+    // Same CASE on both engines.
     val scoreExpr =
       s"""aggregate(sequence(0, ${parts - 1}), CAST(0.0 AS DOUBLE), (acc, i) ->
          |  acc + array_max(transform(sequence(0, ${parts - 1}), j ->
@@ -1867,7 +1677,7 @@ object Similarity {
     // loop (bit-identical doubles; ci1/ci2 gate both paths). Degrades
     // to the HOF on sessions without GraftExtensions.
     val simCol =
-      if (graft.GraftExtensions.available("maxsim_score"))
+      if (graft.functions.GraftExtensions.available("maxsim_score"))
         graft.functions.MaxSimScore.maxsim_score(col("q_vec"),
           col("q_norms"), col("n_vec"), col("n_norms"), parts)
       else expr(scoreExpr)
@@ -1892,8 +1702,7 @@ object Similarity {
     * INVENTION depending on direction; the frontier exposes both —
     * the standard generated-vs-human distribution-gap eval, and in a
     * data pipeline the drift check between two corpus snapshots that
-    * token-level divergence ([[graft.ops.Text]] domainDivergence)
-    * can't see.
+    * token-level divergence can't see.
     *
     * Determinism: cell histograms are exact integer counts; each KL
     * term's log argument is an exact integer ratio

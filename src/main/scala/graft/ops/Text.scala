@@ -14,22 +14,6 @@ object Text {
 
   def tokensCol(textCol: Column): Column = split(textCol, " ")
 
-  /** Whitespace token count + char count. */
-  def withTokenStats(docs: DataFrame, textCol: String = "text"): DataFrame =
-    docs
-      .withColumn("n_tokens", size(tokensCol(col(textCol))))
-      .withColumn("n_chars_calc", length(col(textCol)))
-
-  /** BPE-ish subword count upper bound: words are split at letter/digit
-    * boundaries and every 4 chars of a run counts as one token — a
-    * cheap deterministic proxy for tokenizer budgeting at corpus scale.
-    */
-  def bpeishTokenCount(textCol: Column): Column = {
-    val pieces = split(textCol, "[^A-Za-z0-9]+")
-    aggregate(pieces, lit(0L),
-      (acc, p) => acc + ceil(length(p).cast("double") / 4.0).cast("long"))
-  }
-
   private val stopwords = Seq("the", "a", "of", "to", "and", "in", "is", "it")
 
   /** Quality features + a composite score in [0,1]:
@@ -57,58 +41,8 @@ object Text {
           + least(col("mean_word_len") / lit(10.0), lit(1.0)) * 0.2))
   }
 
-  /** Marker-token language ID heuristic: count hits from tiny per-lang
-    * marker sets; argmax with a fixed tie order (en > es > fr > unknown).
-    * Accuracy is corpus-dependent; what matters for the engine is that
-    * the scoring is deterministic, codegen'd, and mirrors to SQL.
-    */
-  private val markers: Seq[(String, Seq[String])] = Seq(
-    "en" -> Seq("the", "and", "of", "is", "to"),
-    "es" -> Seq("el", "la", "de", "que", "y"),
-    "fr" -> Seq("le", "les", "des", "et", "une"))
-
-  def withLangId(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val toks = tokensCol(lower(col(textCol)))
-    val scored = markers.foldLeft(docs) { case (df, (lang, ms)) =>
-      df.withColumn(s"score_$lang", size(filter(toks, x => x.isin(ms: _*))))
-    }
-    scored.withColumn("lang_pred",
-      when(col("score_en") >= col("score_es") && col("score_en") >= col("score_fr")
-        && col("score_en") > 0, "en")
-        .when(col("score_es") >= col("score_fr") && col("score_es") > 0, "es")
-        .when(col("score_fr") > 0, "fr")
-        .otherwise("unknown"))
-  }
-
-  /** Character-n-gram language ID (the classic Cavnar–Trenkle-style
-    * profile heuristic, miniaturized): per language a tiny set of
-    * characteristic character bigrams; score = total non-overlapping
-    * occurrences, normalized by text length; argmax with fixed tie
-    * order. Counting is `(len(t) - len(replace(t, g, ''))) / len(g)` —
-    * portable to the SQL oracle verbatim, and codegen'd in Spark.
-    */
-  private val bigramProfiles: Seq[(String, Seq[String])] = Seq(
-    "en" -> Seq("th", "he", "in", "er", "an"),
-    "es" -> Seq("de", "la", "os", "ue", "ción"),
-    "fr" -> Seq("le", "ou", "es", "ai", "eau"))
-
   private def occurrences(t: Column, g: String): Column =
     (length(t) - length(call_function("replace", t, lit(g), lit("")))) / lit(g.length)
-
-  def withLangIdNgram(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = lower(col(textCol))
-    val scored = bigramProfiles.foldLeft(docs) { case (df, (lang, grams)) =>
-      df.withColumn(s"ng_$lang",
-        grams.map(g => occurrences(t, g)).reduce(_ + _).cast("double")
-          / greatest(length(col(textCol)), lit(1)).cast("double"))
-    }
-    scored.withColumn("ng_lang_pred",
-      when(col("ng_en") >= col("ng_es") && col("ng_en") >= col("ng_fr")
-        && col("ng_en") > 0, "en")
-        .when(col("ng_es") >= col("ng_fr") && col("ng_es") > 0, "es")
-        .when(col("ng_fr") > 0, "fr")
-        .otherwise("unknown"))
-  }
 
   /** Per-document top TF-IDF terms: tokenize, per-doc term frequency,
     * document frequency via one token-level aggregation, smooth-IDF
@@ -141,20 +75,6 @@ object Text {
       .withColumn("rk", row_number().over(w).cast("int"))
       .filter(col("rk") <= k)
       .select(col("d"), col("tok"), col("tf"), col("df"), col("tfidf"), col("rk"))
-  }
-
-  /** Whole-document fingerprint via the native RollingHash expression;
-    * degrades to a Scala UDF of the same hash on extension-less
-    * sessions (same values, loses codegen fusion).
-    */
-  def withFingerprint(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val fp =
-      if (graft.GraftExtensions.available("rolling_hash"))
-        RollingHash.rolling_hash(col(textCol))
-      else udf((s: String) =>
-        if (s == null) null else Long.box(RollingHash.hashBytes(s.getBytes("UTF-8"))))
-        .apply(col(textCol))
-    docs.withColumn("fingerprint", fp)
   }
 
   /** Winnowing fingerprints (Schleimer et al., SIGMOD'03): hash every
@@ -467,60 +387,6 @@ object Text {
           / (col("df1") * col("df2"))), 6).as("pmi"))
       .orderBy(col("df_xy").desc, col("t1"), col("t2"))
       .limit(topK)
-  }
-
-  /** Pairwise DOMAIN DIVERGENCE between sources (Kilgarriff 2001's
-    * corpus-similarity problem, the mixing-weight input of a
-    * multi-source pipeline): each source's unigram distribution over a
-    * shared top-`vocabSize` vocabulary plus ONE OOV bucket (add-one
-    * smoothed, so every cell is positive and the distribution sums to
-    * 1 exactly), then per source pair both KL directions and the
-    * Jensen–Shannon divergence. Near-identical sources (JS ≈ 0) can
-    * share a mixing weight; an outlier source (high JS to everything)
-    * is the one to re-curate.
-    *
-    * Scale: the corpus is tokenized ONCE (one combinable
-    * (source, bucket) count shuffle); everything after is
-    * vocab-bounded — a dense sources×(K+1) cell table and a pair join
-    * of sources²×(K+1) rows. The top-K + OOV bucketing is what keeps
-    * the dense form bounded at any corpus size.
-    */
-  def domainDivergence(docs: DataFrame, groupCol: String = "source",
-                       vocabSize: Int = 500,
-                       textCol: String = "text"): DataFrame = {
-    val toks = docs
-      .select(col(groupCol).as("__g"),
-        explode(split(lower(col(textCol)), " ")).as("t"))
-      .filter(length(col("t")) > 0)
-    val vocab = toks.groupBy(col("t"))
-      .agg(count(lit(1)).cast("long").as("cnt"))
-      .orderBy(col("cnt").desc, col("t").asc).limit(vocabSize)
-      .select(col("t"), lit(1).as("__in"))
-    // bucket every token: itself if in-vocab, else the single OOV cell
-    val bucketed = toks.join(broadcast(vocab), Seq("t"), "left")
-      .select(col("__g"),
-        when(col("__in").isNull, lit("oov")).otherwise(col("t")).as("b"))
-    val counts = bucketed.groupBy(col("__g"), col("b"))
-      .agg(count(lit(1)).cast("double").as("c"))
-    val totals = counts.groupBy(col("__g")).agg(sum(col("c")).as("tot"))
-    val buckets = broadcast(vocab.select(col("t").as("b"))
-      .unionByName(toks.sparkSession.range(1).select(lit("oov").as("b"))))
-    val dense = totals.crossJoin(buckets)
-      .join(counts, Seq("__g", "b"), "left")
-      .select(col("__g"), col("b"),
-        ((coalesce(col("c"), lit(0.0)) + lit(1.0)) /
-          (col("tot") + lit(vocabSize + 1.0))).as("p"))
-    val a = dense.select(col("__g").as("ga"), col("b"), col("p").as("pa"))
-    val bb = dense.select(col("__g").as("gb"), col("b"), col("p").as("pb"))
-    val m = (col("pa") + col("pb")) / lit(2.0)
-    a.join(bb, "b").filter(col("ga") < col("gb"))
-      .groupBy(col("ga"), col("gb"))
-      .agg(sum(col("pa") * log(col("pa") / col("pb"))).as("kl_ab"),
-        sum(col("pb") * log(col("pb") / col("pa"))).as("kl_ba"),
-        sum(col("pa") * log(col("pa") / m)).as("__ja"),
-        sum(col("pb") * log(col("pb") / m)).as("__jb"))
-      .select(col("ga"), col("gb"), col("kl_ab"), col("kl_ba"),
-        (lit(0.5) * col("__ja") + lit(0.5) * col("__jb")).as("js"))
   }
 
   /** Interpolated Kneser–Ney bigram probabilities (Kneser & Ney 1995;

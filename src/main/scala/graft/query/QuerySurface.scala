@@ -17,12 +17,6 @@ object QuerySurface {
   def distinctValues(df: DataFrame, column: String): DataFrame =
     df.select(column).distinct()
 
-  /** `SELECT * FROM t LIMIT n` preview (athena.py:83-86 = O2), made
-    * deterministic with an explicit sort.
-    */
-  def preview(df: DataFrame, orderCol: String, n: Int): DataFrame =
-    df.orderBy(col(orderCol)).limit(n)
-
   /** Latest-k rows of one key, descending range key — the DynamoDB
     * `Query(hash_key, scan_index_forward=False, limit=k)` pattern
     * (data_faker.py:105-111 = S8/O3).

@@ -19,9 +19,6 @@ import org.apache.spark.sql.types._
   */
 object Manifest {
 
-  final case class DataFile(
-      itemCount: Long, md5Checksum: String, etag: String, dataFileS3Key: String)
-
   val dataFileSchema: StructType = StructType(Seq(
     StructField("itemCount", LongType),
     StructField("md5Checksum", StringType),

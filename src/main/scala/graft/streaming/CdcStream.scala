@@ -113,35 +113,6 @@ object CdcStream {
       }
   }
 
-  /** Streaming exact deduplication: drop every row whose dedup key was
-    * already seen within the watermark horizon — the streaming form of
-    * the corpus exact-dedup operator (`Dedup.exact`), for pipelines
-    * that ingest training data continuously instead of in batches.
-    *
-    * Built on `dropDuplicatesWithinWatermark`: state holds one entry
-    * per distinct key and is evicted once the watermark passes the
-    * key's event time + horizon, so state is O(distinct keys within the
-    * horizon), not O(stream history). The horizon is the declared
-    * maximum duplicate-arrival skew: a duplicate arriving later than
-    * `horizon` after the original is re-emitted (its state is gone) —
-    * the standard trade; size the horizon to the pipeline's real replay
-    * window. Emission is append-mode and immediate (first occurrence
-    * passes through; state only suppresses repeats), so downstream
-    * operators see no watermark-induced latency.
-    *
-    * `dedupKey` is any deterministic key expression — e.g. a full-row
-    * content hash for exact-row dedup, or a document content hash for
-    * corpus dedup.
-    */
-  def dedupStream(events: DataFrame, eventTime: org.apache.spark.sql.Column,
-                  horizon: String, dedupKey: org.apache.spark.sql.Column): DataFrame =
-    events
-      .withColumn("__ts", eventTime)
-      .withColumn("__dk", dedupKey)
-      .withWatermark("__ts", horizon)
-      .dropDuplicatesWithinWatermark("__dk")
-      .drop("__ts", "__dk")
-
   /** Streaming maintenance of a MERGEABLE pre-aggregate: each
     * micro-batch reduces to one HLL sketch per `dayCol` group
     * (O(batch) work, ~16 KB per group) and unions it into the persisted

@@ -22,6 +22,29 @@ class PlanGoldenSpec extends AnyFunSuite {
   private val goldenPath = Paths.get("src/test/resources/plan_golden.tsv")
   private val sfDir = "/root/testdata/sf0.001"
 
+  /** The plan-audited headline registry entries: the flagship merge,
+    * the W1 dedup, the P9 partition-range read, the T3 watermark clamp
+    * and the compare oracle's diff classification.
+    */
+  private val Headline = Seq("j1_flagship_upsert", "w1_dedup_latest",
+    "p9_partition_range", "t3_watermark_clamp", "cmp1_diff_classify")
+
+  /** (shuffle exchanges, broadcast exchanges) of the physical plan,
+    * counted via tree walk, not the text dump: a persisted subtree's
+    * plan prints again at every InMemoryTableScan reference, so a
+    * regex over the dump would multiply shared exchanges by their
+    * consumer count. Build the DataFrame with AQE OFF — the adaptive
+    * wrapper hides the static tree from collect().
+    */
+  private def exchangeCounts(df: org.apache.spark.sql.DataFrame): (Int, Int) = {
+    val plan = df.queryExecution.executedPlan
+    val shuffles = plan.collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e }.size
+    val broadcasts = plan.collect {
+      case e: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec => e }.size
+    (shuffles, broadcasts)
+  }
+
   test("headline plans keep their golden exchange/broadcast counts") {
     // own session state so AQE can be disabled without touching suites
     // sharing the JVM-wide TestSpark session (same extensions, same
@@ -30,15 +53,8 @@ class PlanGoldenSpec extends AnyFunSuite {
     s.conf.set("spark.sql.adaptive.enabled", "false")
     org.apache.spark.sql.SparkSession.setActiveSession(s)
     try {
-      val got: Seq[(String, Int, Int)] = Plans.Headline.map { n =>
-        val df = SparkEntry.queries(n)(s, sfDir)
-        val (sh, bc) = Plans.exchangeCounts(df)
-        (n, sh, bc)
-      } ++ Plans.Fragments.map { case (n, fn) =>
-        // lazy structural cores of the loop/eager queries Headline
-        // can't carry — built from the operators' own private[graft]
-        // builders, never persisted (see Plans.Fragments)
-        val (sh, bc) = Plans.exchangeCounts(fn(s, sfDir))
+      val got: Seq[(String, Int, Int)] = Headline.map { n =>
+        val (sh, bc) = exchangeCounts(SparkEntry.queries(n)(s, sfDir))
         (n, sh, bc)
       }
       if (sys.env.contains("PLAN_GOLDEN_REGEN")) {
@@ -98,7 +114,7 @@ class PlanGoldenSpec extends AnyFunSuite {
         }.flatten
       Seq("ss3_lsh_topk", "ss4_lsh_neardup_pairs", "bx2_bitext_lsh").foreach { n =>
         val plans = withCached(
-          SparkEntry.queries(n)(s, sfDir).queryExecution.executedPlan)
+          PlanFixtures.queries(n)(s, sfDir).queryExecution.executedPlan)
         // the candidate join is the one keyed on the bucket column; its
         // INPUTS (whether they arrive via shuffle or broadcast — tiny
         // test SFs broadcast what a 100 TB run must shuffle) must be
@@ -131,12 +147,12 @@ class PlanGoldenSpec extends AnyFunSuite {
     }
   }
 
-  /** The j5 gate query's scale claim, physically pinned: the bucketed
+  /** The bucketed merge's scale claim, physically pinned: the bucketed
     * snapshot side of the upsertJoin leg must reach the merge join with
     * ZERO exchanges — the whole point of the join-shaped formulation
-    * (O(delta) shuffle bytes per tick at 100 TB). Built from j5's exact
-    * inputs (same bulkWrite, same delta slice) so the pin tracks the
-    * registered query, not a synthetic fixture.
+    * (O(delta) shuffle bytes per tick at 100 TB). Built from the former
+    * j5 registry entry's inputs (the flagship's even/odd split of the
+    * keyed feed).
     */
   test("j5's bucketed snapshot side merges exchange-free") {
     import org.apache.spark.sql.functions._

@@ -23,7 +23,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("column pruning reaches the scan: h1 reads only its 5 needed lineitem columns") {
-    val q = SparkEntry.queries("h1_pricing_summary")(spark, sf)
+    val q = PlanFixtures.queries("h1_pricing_summary")(spark, sf)
     val scans = withAqeOff(q.queryExecution.executedPlan.collectLeaves().collect {
       case f: FileSourceScanExec => f
     })
@@ -73,7 +73,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("broadcast dims: h4 joins supplier and nation via broadcast, not shuffle") {
-    val q = SparkEntry.queries("h4_top_suppliers")(spark, sf)
+    val q = PlanFixtures.queries("h4_top_suppliers")(spark, sf)
     val plan = withAqeOff(q.queryExecution.executedPlan)
     val broadcasts = plan.collect { case b: BroadcastExchangeExec => b }
     assert(broadcasts.size >= 2, "both dim tables must arrive by broadcast")
@@ -155,7 +155,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("pivot with a pinned value list keeps the two-phase aggregate shape") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val q = SparkEntry.queries("pv1_pivot")(spark, sf)
+    val q = PlanFixtures.queries("pv1_pivot")(spark, sf)
     val exchanges = withAqeOff(q.queryExecution.executedPlan.collect {
       case e: ShuffleExchangeExec => e
     })
@@ -173,11 +173,11 @@ class PlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val want = spark.sparkContext.defaultParallelism
     val wide = spark.range(0, 10000, 1, numPartitions = want).toDF("id")
-    val plan = withAqeOff(QueriesOps.par(wide).queryExecution.executedPlan)
+    val plan = withAqeOff(PlanFixtures.par(wide).queryExecution.executedPlan)
     assert(plan.collect { case e: ShuffleExchangeExec => e }.isEmpty,
       "par() must not inject an Exchange when the scan already has >= one partition per core")
     val narrow = spark.range(0, 10000, 1, numPartitions = 1).toDF("id")
-    assert(QueriesOps.par(narrow).rdd.getNumPartitions === want,
+    assert(PlanFixtures.par(narrow).rdd.getNumPartitions === want,
       "par() must still fan out a single-partition fixture scan")
   }
 
@@ -232,7 +232,7 @@ class PlanSpec extends AnyFunSuite {
   test("sketch probes are native expressions: no ScalaUDF in the hh2/dc2 plans") {
     import org.apache.spark.sql.catalyst.expressions.ScalaUDF
     for (q <- Seq("hh2_cms_heavy_hitters", "dc2_bloom_decontaminate")) {
-      val plan = SparkEntry.queries(q)(spark, sf).queryExecution.optimizedPlan
+      val plan = PlanFixtures.queries(q)(spark, sf).queryExecution.optimizedPlan
       val udfs = plan.collect { case p => p.expressions.flatMap(_.collect {
         case u: ScalaUDF => u
       }) }.flatten

@@ -185,12 +185,16 @@ class ForkFreeLocalFsSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft_forkfree_link")
     val target = Files.writeString(dir.resolve("target.txt"), "x")
     val link = Files.createSymbolicLink(dir.resolve("link"), target)
-    // a scheme-less path: the stock code reads the link target of the
-    // path's string form, so it reports a `file:` URI as no link
-    val linkSt = fs.getFileLinkStatus(new Path(link.toString))
-    assert(linkSt.isSymlink)
-    assert(linkSt.getSymlink === fs.makeQualified(new Path(target.toUri)))
-    assert(linkSt.getSymlink === stock.getFileLinkStatus(new Path(link.toString)).getSymlink)
+    // a scheme-less path and a `file:` URI name the same link (the stock
+    // code reads the link target of the path's string form, so it
+    // reports the URI as no link)
+    Seq(new Path(link.toString), new Path(link.toUri)).foreach { p =>
+      val linkSt = fs.getFileLinkStatus(p)
+      assert(linkSt.isSymlink, p)
+      assert(linkSt.getSymlink === fs.makeQualified(new Path(target.toUri)), p)
+    }
+    assert(fs.getFileLinkStatus(new Path(link.toString)).getSymlink ===
+      stock.getFileLinkStatus(new Path(link.toString)).getSymlink)
     val fileSt = fs.getFileLinkStatus(new Path(target.toUri))
     assert(!fileSt.isSymlink && fileSt.isFile && fileSt.getLen === 1)
     assert(fileSt.getPath === fs.makeQualified(new Path(target.toUri)))
