@@ -782,8 +782,8 @@ object Queries {
 
     // ST5: the BACKFILL → STREAMING HANDOFF seam (the lambda-
     // architecture moment every CDC pipeline lives through once): hour
-    // A arrives as a batch backfill through TableWriter.mergeCommit's
-    // bootstrap path, hour B lands as CDC files and drains through the
+    // A arrives as a batch backfill through TableWriter.mergeCommit into
+    // an absent lake, hour B lands as CDC files and drains through the
     // STREAMING merge into the same lake — and the final table must
     // equal the per-id latest-wins truth of both hours, proving the
     // batch-written and stream-merged halves compose under one table

@@ -20,19 +20,25 @@ object Ingest {
     df.withColumn("id", concat(
       lit("account:"), col("account"), lit(",create_at:"), col("create_at")))
 
-  /** 5-level partition columns by fixed-offset substring of the
-    * zero-padded ISO string (initial_load.py:134-153). The substring
-    * trick is deliberate: it never parses the timestamp, so it is
-    * codegen-friendly and immune to format/locale drift — but it REQUIRES
-    * the validated wire format (Schemas.TsPattern); we enforce it with an
-    * explicit schema instead of inference.
+  /** 5-level partition columns `create_year…create_minute` from `src`
+    * ([[withMinuteColumns]]; initial_load.py:134-153).
     */
   def withPartitionColumns(df: DataFrame, src: String = "create_at"): DataFrame =
-    df.withColumn("create_year", substring(col(src), 1, 4))
-      .withColumn("create_month", substring(col(src), 6, 2))
-      .withColumn("create_day", substring(col(src), 9, 2))
-      .withColumn("create_hour", substring(col(src), 12, 2))
-      .withColumn("create_minute", substring(col(src), 15, 2))
+    withMinuteColumns(df, src, "create_")
+
+  /** The five columns `year`, `month`, `day`, `hour`, `minute`, each
+    * named with `prefix`, by fixed-offset substring of the zero-padded
+    * ISO string in `src`. The substring trick is deliberate: it never
+    * parses the timestamp, so it is codegen-friendly and immune to
+    * format/locale drift — but it REQUIRES the validated wire format
+    * (Schemas.TsPattern); we enforce it with an explicit schema instead
+    * of inference.
+    */
+  private[graft] def withMinuteColumns(df: DataFrame, src: String, prefix: String = ""): DataFrame =
+    Seq(("year", 1, 4), ("month", 6, 2), ("day", 9, 2), ("hour", 12, 2), ("minute", 15, 2))
+      .foldLeft(df) { case (d, (name, pos, len)) =>
+        d.withColumn(prefix + name, substring(col(src), pos, len))
+      }
 
   /** Full initial-load transform: flat rows -> 13-column lake rows. */
   def toLakeRows(flat: DataFrame): DataFrame = {
@@ -61,12 +67,7 @@ object Ingest {
     * and compacted away by the merge job.
     */
   def landCdc(events: DataFrame, dir: String): Unit = {
-    val partitioned = events
-      .withColumn("year", substring(col("update_at"), 1, 4))
-      .withColumn("month", substring(col("update_at"), 6, 2))
-      .withColumn("day", substring(col("update_at"), 9, 2))
-      .withColumn("hour", substring(col("update_at"), 12, 2))
-      .withColumn("minute", substring(col("update_at"), 15, 2))
+    val partitioned = withMinuteColumns(events, "update_at")
     // hash-repartition on the partition columns: each minute's rows
     // land in exactly one task, so the dynamic partitionBy write emits
     // ONE file per minute dir (the bounded-small-files contract) while
@@ -130,6 +131,8 @@ object Ingest {
   * the incoming batch, which is what Hudi COW does per commit.
   */
 object TableWriter {
+  import org.apache.hadoop.fs.Path
+  import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.generatePartitionPath
   import graft.merge.Merge
 
   val partitionCols: Seq[String] =
@@ -145,15 +148,6 @@ object TableWriter {
     lake.write.option("compression", codec)
       .partitionBy(partitionCols: _*).mode("overwrite").parquet(path)
 
-  /** Upsert commit: merge result written with dynamic partition
-    * overwrite — only partitions present in `merged` are replaced.
-    */
-  def upsertWrite(merged: DataFrame, path: String): Unit =
-    merged.write
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCols: _*)
-      .mode("overwrite").parquet(path)
-
   /** A disjunction of partition-column equalities for the distinct
     * partitions present in `delta` ([[touchedPartitions]], collected to
     * the driver: one tuple per touched DAY; a CDC tick caps at 100
@@ -161,17 +155,14 @@ object TableWriter {
     * Catalyst turns it into partition-directory pruning.
     */
   def touchedPartitionsPredicate(delta: DataFrame): Option[Column] =
-    Some(touchedPartitions(delta)).filter(_.nonEmpty).map(partitionsPredicate)
-
-  private def partitionsPredicate(parts: Seq[Seq[String]]): Column =
-    parts.map { p =>
+    Some(touchedPartitions(delta)).filter(_.nonEmpty).map(_.map { p =>
       partitionCols.zip(p)
         // null-safe <=>: a null partition value (__HIVE_DEFAULT_PARTITION__)
         // must still select its existing versions, or merging silently
         // duplicates those keys
         .map { case (c, v) => col(c) <=> lit(v) }
         .reduce(_ && _)
-    }.reduce(_ || _)
+    }.reduce(_ || _))
 
   /** The distinct `partitionCols` values of `delta` in ONE shuffle-free
     * job: every task dedups its own rows, the driver dedups the few
@@ -186,68 +177,71 @@ object TableWriter {
       .collect().distinct.toSeq
   }
 
-  /** The O(delta)-cost upsert commit — the scale path for the CDC loop.
+  /** The one commit every incremental lake write goes through: it reads
+    * the slice of the lake in the day partitions `parts` and writes
+    * `rows(slice)` back by dynamic partition overwrite, which replaces
+    * exactly the partitions the written rows name.
     *
-    * The lake is partitioned by create_* which derive from `create_at`,
-    * an IMMUTABLE component of the record key `id` (initial_load.py:
-    * 124-153: id = account + create_at). Hence every existing version of
-    * a delta key lives in a partition the delta itself names — reading
-    * only the delta's partition directories loses nothing, and the merge
-    * is exact while doing O(touched partitions) work per commit instead
-    * of O(table) (at 100 TB: a few GB read+rewritten per tick, not the
-    * lake).
-    *
-    * A commit into an existing lake is three Spark jobs. Job one is
-    * [[touchedPartitions]], a shuffle-free pass over the delta that also
-    * decides emptiness: an empty delta is a no-op that neither creates
-    * nor rewrites anything. Job two is the shuffle map stage of the
-    * single upsert window ([[graft.merge.Merge.upsert]]), reading the
-    * delta and the snapshot slice. The slice is read with the delta's
-    * own schema (no parquet schema-inference job; partition columns stay
-    * the zero-padded strings, see [[read]]) from exactly the touched
-    * partition directories that exist, under `basePath = path`. Their
-    * names come from Spark's own partition-path escaping, so a null
-    * value finds its `__HIVE_DEFAULT_PARTITION__` rows. Job three is the
-    * dynamic-overwrite write of the window's output. Because the slice
-    * takes the delta's schema, the delta must carry exactly the lake's
-    * columns ([[Ingest.toLakeRows]]): a lake column it lacked would be
-    * dropped from every rewritten partition.
+    * The slice is read with [[Schemas.lakeRow]] (no schema-inference job;
+    * partition columns stay the zero-padded strings, see [[read]]) from
+    * the partition directories of `parts` that exist, under
+    * `basePath = path`. Their names come from Spark's own partition-path
+    * escaping, so a null value finds its `__HIVE_DEFAULT_PARTITION__`
+    * rows. With no such directory, or no lake yet, the slice is empty and
+    * the write creates what it needs.
     *
     * Writing straight from a plan that reads `path` is safe, with no
     * copy of the slice first: dynamic partition overwrite does not
     * delete partition directories before the job (only static mode
     * does), task output goes to `path/.spark-staging-<job>`, and the
-    * touched partitions are swapped in only at job commit. By then the
-    * shuffle map stage — the only stage that reads the snapshot — has
-    * finished, and a retried reduce task re-reads shuffle output or,
-    * on fetch failure, the still-unswapped snapshot files.
+    * touched partitions are swapped in only at job commit. By then every
+    * task that reads the slice has finished, and a retried task re-reads
+    * shuffle output or the still-unswapped slice files.
+    */
+  private def rewritePartitions(spark: SparkSession, path: String, parts: Seq[Seq[String]])
+                               (rows: DataFrame => DataFrame): Unit = {
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dirs = parts.map(partitionDir(path, _)).filter(fs.exists)
+    val slice =
+      if (dirs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), Schemas.lakeRow)
+      else spark.read.schema(Schemas.lakeRow).option("basePath", path)
+        .parquet(dirs.map(_.toString): _*)
+    rows(slice).write
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCols: _*)
+      .mode("overwrite").parquet(path)
+  }
+
+  private def partitionDir(path: String, part: Seq[String]): Path =
+    generatePartitionPath(partitionCols.zip(part).toMap, partitionCols, new Path(path))
+
+  /** The O(delta)-cost upsert commit: the latest version per key of the
+    * lake and `delta` ([[graft.merge.Merge.upsert]]) over the days the
+    * delta touches, through [[rewritePartitions]]. The delta is projected
+    * onto [[Schemas.lakeRow]]: a lake column it lacks is null in its own
+    * rows and kept in every other row. A first commit into an absent lake
+    * creates it.
+    *
+    * The lake is partitioned by create_* which derive from `create_at`,
+    * an IMMUTABLE component of the record key `id` (initial_load.py:
+    * 124-153: id = account + create_at). Hence every existing version of
+    * a delta key lives in a partition the delta itself names, and the
+    * merge is exact while doing O(touched partitions) work per commit.
+    *
+    * A commit is three Spark jobs: [[touchedPartitions]], a shuffle-free
+    * pass over the delta that also decides emptiness (an empty delta is a
+    * no-op that neither creates nor rewrites anything); the shuffle map
+    * stage of the upsert window; and the write.
     */
   def mergeCommit(spark: SparkSession, delta: DataFrame, path: String,
                   keyCol: String = "id", versionCol: String = "update_at"): Unit = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.generatePartitionPath
     val touched = touchedPartitions(delta)
     if (touched.isEmpty) return
-    val lake = new Path(path)
-    // the path's own FileSystem, not java.io.File: a Hadoop URI
-    // (file:/, hdfs://, s3a://) never exists as a local file, and a
-    // wrong "absent" here would bulk-overwrite the whole lake
-    val fs = lake.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(lake)) {
-      // bootstrap: the first delta IS the table — but it can still carry
-      // several versions of one key, so it gets the same in-batch dedup
-      // a merge would apply
-      bulkWrite(Merge.dedupLatest(delta, keyCol, versionCol), path)
-    } else {
-      val dirs = touched
-        .map(p => generatePartitionPath(partitionCols.zip(p).toMap, partitionCols, lake))
-        .filter(fs.exists)
-      val snapshotSlice =
-        if (dirs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), delta.schema)
-        else spark.read.schema(delta.schema).option("basePath", path)
-          .parquet(dirs.map(_.toString): _*)
-      upsertWrite(Merge.upsert(snapshotSlice, delta, keyCol, versionCol), path)
-    }
+    // upsert projects the delta onto the slice's columns; a delta that
+    // carries them all (Ingest.toLakeRows) gets no extra plan node
+    val lakeDelta = Schemas.lakeRow.filterNot(f => delta.columns.contains(f.name))
+      .foldLeft(delta)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
+    rewritePartitions(spark, path, touched)(Merge.upsert(_, lakeDelta, keyCol, versionCol))
   }
 
   /** Read the lake with its fixed row schema, [[Schemas.lakeRow]]: one
@@ -261,89 +255,69 @@ object TableWriter {
     * `create_day=08` back as int 8 — and a subsequent dynamic-overwrite
     * write would then create `create_day=8` BESIDE the existing
     * `create_day=08`, silently duplicating the partition's rows on read
-    * (both dirs parse to the same logical value). Every TableWriter
-    * write path reads the lake with string partition columns — this
-    * read, or [[mergeCommit]]'s slice read with the delta's schema — so
-    * the library is safe on any session, not just GraftSession.
+    * (both dirs parse to the same logical value). This read and
+    * [[rewritePartitions]]' slice read both take this schema, so the
+    * library is safe on any session, not just GraftSession.
     *
     * A user-specified schema disables partition type inference for that
     * read, so the directory string `08` survives as-is AND the
     * `create_*` columns remain genuine partition columns — filters on
-    * them (a [[touchedPartitionsPredicate]], compaction's day predicate)
-    * still prune at the directory level. A `withColumn` rewrite would
-    * have silently turned those O(delta) scans into O(table) post-scan
-    * filters on inference-enabled sessions.
+    * them (a [[touchedPartitionsPredicate]]) still prune at the
+    * directory level. A `withColumn` rewrite would have silently turned
+    * those O(delta) scans into O(table) post-scan filters on
+    * inference-enabled sessions.
     */
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(Schemas.lakeRow).parquet(path)
 
   /** Small-file compaction for one day partition: every 10 s merge tick
     * adds a few files to each touched day, so a hot partition
-    * accumulates thousands of small files over days — the classic CDC
-    * lake pathology. Rewrite just that partition into `targetFiles`
-    * files via the same dynamic-overwrite path a merge commit uses:
-    * O(partition) IO, untouched partitions keep their files, readers
-    * see the old file set until the atomic-per-file swap completes.
-    * Run on a compaction cadence (hourly/daily), not per tick.
+    * accumulates many small files over days. Rewrites just that day's
+    * directory into `targetFiles` files through [[rewritePartitions]], in
+    * one Spark job; untouched partitions keep their files. Run on a
+    * compaction cadence (hourly/daily), not per tick.
     */
   def compactPartition(spark: SparkSession, path: String,
                        year: String, month: String, day: String,
-                       targetFiles: Int = 1): Unit = {
-    val pred = col("create_year") === year &&
-      col("create_month") === month && col("create_day") === day
-    val slice = read(spark, path).filter(pred).coalesce(targetFiles)
-    // localCheckpoint breaks the read-from/write-to-same-path cycle;
-    // cost is O(this partition), never the table
-    upsertWrite(slice.localCheckpoint(), path)
-  }
+                       targetFiles: Int = 1): Unit =
+    rewritePartitions(spark, path, Seq(Seq(year, month, day)))(_.coalesce(targetFiles))
 
   /** Right-to-be-forgotten purge: delete every lake row whose `keyCol`
     * is in `keys`, rewriting ONLY the partitions that can contain those
-    * keys — O(touched partitions), never a table scan.
+    * keys through [[rewritePartitions]]. The record key embeds its
+    * immutable `create_at` (initial_load.py:124-133), so the key set
+    * names its own partitions with no lake read to locate them. Inside
+    * them the survivors are a broadcast anti-join (a purge set is a
+    * user's keys, not a corpus).
     *
-    * Works because the record key embeds its immutable `create_at`
-    * (initial_load.py:124-133), the same invariant [[mergeCommit]]
-    * leans on: the key set itself NAMES its partitions, so the touched
-    * set derives from the keys alone (no lake read to locate them).
-    * Inside each touched partition the survivors are a broadcastable
-    * anti-join (the purge set is small — a user's keys, not a corpus).
-    *
-    * Dynamic partition overwrite cannot DELETE a partition that ends up
-    * empty (it only replaces partitions present in the written data),
-    * so fully-purged partitions are removed explicitly through the
-    * Hadoop FileSystem — without this, readers would keep seeing every
-    * purged row of any partition the purge emptied.
+    * Dynamic partition overwrite cannot remove a partition that ends up
+    * empty, so the partitions the purge empties, found before the write,
+    * are deleted after it.
     */
   def purgeKeys(spark: SparkSession, path: String, keys: DataFrame,
                 keyCol: String = "id"): Unit = {
     val withTs = keys.select(col(keyCol).as("__k"),
       substring_index(col(keyCol), ",create_at:", -1).as("create_at"))
     // fail LOUDLY if any key lacks the synthetic-id suffix (custom
-    // keyCol, malformed id): the partition predicate derived from a bad
-    // extraction matches nothing and the RTBF purge would silently
-    // delete nothing — a silent compliance failure. Purge sets are
-    // small (a user's keys), so this extra pass is cheap.
+    // keyCol, malformed id): the partitions derived from a bad
+    // extraction hold nothing and the RTBF purge would silently delete
+    // nothing — a silent compliance failure. Purge sets are small (a
+    // user's keys), so this extra pass is cheap.
     val bad = withTs.filter(!col("create_at").rlike(Schemas.TsRegex)).count()
     require(bad == 0,
       s"purgeKeys: $bad key(s) do not embed a ',create_at:<${Schemas.TsPattern}>' " +
-        "suffix; refusing to purge (the derived partition predicate would be wrong)")
-    val withParts = Ingest.withPartitionColumns(withTs)
-    val touched = touchedPartitions(withParts)
-    if (touched.nonEmpty) {
-      val slice = read(spark, path).filter(partitionsPredicate(touched))
+        "suffix; refusing to purge (the derived partitions would be wrong)")
+    val touched = touchedPartitions(Ingest.withPartitionColumns(withTs))
+    if (touched.isEmpty) return
+    var emptied = Seq.empty[Seq[String]]
+    rewritePartitions(spark, path, touched) { slice =>
       val kept = slice.join(
-          broadcast(keys.select(col(keyCol).as("__k")).distinct()),
-          slice(keyCol) === col("__k"), "left_anti")
-        .localCheckpoint()
-      val surviving = touchedPartitions(kept).toSet
-      upsertWrite(kept, path)
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      touched.filterNot(surviving).foreach { p =>
-        val dir = partitionCols.zip(p).map { case (c, v) => s"$c=$v" }
-          .mkString(path + "/", "/", "")
-        fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-      }
+        broadcast(keys.select(col(keyCol).as("__k")).distinct()),
+        slice(keyCol) === col("__k"), "left_anti")
+      emptied = touched.filterNot(touchedPartitions(kept).toSet)
+      kept
     }
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    emptied.foreach(p => fs.delete(partitionDir(path, p), true))
   }
 }

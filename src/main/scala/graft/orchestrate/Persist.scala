@@ -3,86 +3,27 @@ package graft.orchestrate
 import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 import java.util.UUID
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+
 /** JSON persistence for the tracker state machine and the per-tick job
   * input — the reference round-trips both through S3 documents
   * (incremental_load_orchestration.py:89-154 CDCTracker.read/write,
   * :240-277 GlueJobInput) so a cron orchestrator survives restarts.
-  * Hand-rolled serde for two tiny fixed-shape documents (no JSON
-  * library in the dependency budget); field names mirror the reference.
+  * Jackson's tree model (jackson-databind ships with Spark) reads and
+  * writes the two fixed-shape documents; field names mirror the reference.
   */
 object Persist {
 
-  // -- minimal JSON helpers (string/bool/array-of-string fields only) --
+  private val mapper = new ObjectMapper
 
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+  /** A string field; absent, JSON `null` or not a string reads as `None`. */
+  private def text(doc: JsonNode, name: String): Option[String] =
+    Some(doc.path(name)).filter(_.isTextual).map(_.asText)
 
-  /** Single left-to-right pass: each escape is decoded exactly once
-    * (a replace-chain would re-interpret backslashes produced by an
-    * earlier replacement, corrupting e.g. the literal two chars "\n").
-    */
-  private def unescape(s: String): String = {
-    val out = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '"' => out += '"'; i += 2
-          case '\\' => out += '\\'; i += 2
-          case 'n' => out += '\n'; i += 2
-          case 'r' => out += '\r'; i += 2
-          case 't' => out += '\t'; i += 2
-          case 'u' if i + 5 < s.length =>
-            out += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar; i += 6
-          case other => out += other; i += 2
-        }
-      } else { out += c; i += 1 }
-    }
-    out.toString
-  }
-
-  private def strField(json: String, name: String): Option[String] = {
-    val re = ("\"" + name + "\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"").r
-    re.findFirstMatchIn(json).map(m => unescape(m.group(1)))
-  }
-
-  private def boolField(json: String, name: String): Option[Boolean] = {
-    val re = ("\"" + name + "\"\\s*:\\s*(true|false)").r
-    re.findFirstMatchIn(json).map(_.group(1).toBoolean)
-  }
-
-  /** Quote-aware scan to the MATCHING ']' (a ']' inside a quoted
-    * element must not terminate the array), then extract the quoted
-    * elements.
-    */
-  private def arrField(json: String, name: String): Option[Seq[String]] = {
-    val startRe = ("\"" + name + "\"\\s*:\\s*\\[").r
-    startRe.findFirstMatchIn(json).map { m =>
-      var i = m.end
-      var inString = false
-      var escaped = false
-      val body = new StringBuilder
-      var done = false
-      while (i < json.length && !done) {
-        val c = json.charAt(i)
-        if (escaped) { body += c; escaped = false }
-        else if (inString && c == '\\') { body += c; escaped = true }
-        else if (c == '"') { body += c; inString = !inString }
-        else if (c == ']' && !inString) done = true
-        else body += c
-        i += 1
-      }
-      "\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(body.toString)
-        .map(m2 => unescape(m2.group(1))).toSeq
-    }
-  }
+  private def required(doc: JsonNode, name: String): String =
+    text(doc, name).getOrElse(throw new IllegalArgumentException(s"missing $name"))
 
   /** Writes the whole document or nothing, as the reference's S3 PUT
     * does: the text goes to a temp file beside `path`, which then
@@ -102,21 +43,21 @@ object Persist {
 
   // -- CDCTracker.State <-> JSON (orchestration.py:141-154) ------------
 
-  def stateToJson(s: CdcTracker.State): String = {
-    val next = s.nextProcessedPartition.map(jstr).getOrElse("null")
-    val run = s.lastRunId.map(jstr).getOrElse("null")
-    s"""{"last_processed_partition": ${jstr(s.lastProcessedPartition)},
-       | "next_processed_partition": $next,
-       | "last_run_id": $run,
-       | "ready_to_run_next": ${s.readyToRunNext}}""".stripMargin
-  }
+  def stateToJson(s: CdcTracker.State): String =
+    mapper.writeValueAsString(mapper.createObjectNode()
+      .put("last_processed_partition", s.lastProcessedPartition)
+      .put("next_processed_partition", s.nextProcessedPartition.orNull)
+      .put("last_run_id", s.lastRunId.orNull)
+      .put("ready_to_run_next", s.readyToRunNext))
 
-  def stateFromJson(json: String): CdcTracker.State = CdcTracker.State(
-    lastProcessedPartition = strField(json, "last_processed_partition")
-      .getOrElse(throw new IllegalArgumentException("missing last_processed_partition")),
-    nextProcessedPartition = strField(json, "next_processed_partition"),
-    lastRunId = strField(json, "last_run_id"),
-    readyToRunNext = boolField(json, "ready_to_run_next").getOrElse(true))
+  def stateFromJson(json: String): CdcTracker.State = {
+    val doc = mapper.readTree(json)
+    CdcTracker.State(
+      lastProcessedPartition = required(doc, "last_processed_partition"),
+      nextProcessedPartition = text(doc, "next_processed_partition"),
+      lastRunId = text(doc, "last_run_id"),
+      readyToRunNext = Some(doc.path("ready_to_run_next")).filter(_.isBoolean).forall(_.asBoolean))
+  }
 
   def writeState(s: CdcTracker.State, path: String): Unit =
     replaceAtomically(path, stateToJson(s))
@@ -133,17 +74,21 @@ object Persist {
       endBeforePartition: String,
       s3uriList: Seq[String])
 
-  def jobInputToJson(j: JobInput): String =
-    s"""{"start_after_partition": ${jstr(j.startAfterPartition)},
-       | "end_before_partition": ${jstr(j.endBeforePartition)},
-       | "s3uri_list": [${j.s3uriList.map(jstr).mkString(", ")}]}""".stripMargin
+  def jobInputToJson(j: JobInput): String = {
+    val doc = mapper.createObjectNode()
+      .put("start_after_partition", j.startAfterPartition)
+      .put("end_before_partition", j.endBeforePartition)
+    j.s3uriList.foldLeft(doc.putArray("s3uri_list"))(_.add(_))
+    mapper.writeValueAsString(doc)
+  }
 
-  def jobInputFromJson(json: String): JobInput = JobInput(
-    startAfterPartition = strField(json, "start_after_partition")
-      .getOrElse(throw new IllegalArgumentException("missing start_after_partition")),
-    endBeforePartition = strField(json, "end_before_partition")
-      .getOrElse(throw new IllegalArgumentException("missing end_before_partition")),
-    s3uriList = arrField(json, "s3uri_list").getOrElse(Seq.empty))
+  def jobInputFromJson(json: String): JobInput = {
+    val doc = mapper.readTree(json)
+    JobInput(
+      startAfterPartition = required(doc, "start_after_partition"),
+      endBeforePartition = required(doc, "end_before_partition"),
+      s3uriList = doc.path("s3uri_list").asScala.map(_.asText).toSeq)
+  }
 
   def writeJobInput(j: JobInput, path: String): Unit =
     replaceAtomically(path, jobInputToJson(j))

@@ -2,6 +2,8 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
+import com.fasterxml.jackson.databind.ObjectMapper
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
@@ -61,18 +63,16 @@ object Manifest {
     def dataDir(prefix: String): String = s"$prefix/AWSDynamoDB/$exportId/data"
   }
 
+  private val mapper = new ObjectMapper
+
   def writeExportTracker(t: ExportTracker, path: String): Unit = {
     Files.createDirectories(Paths.get(path).getParent)
     Files.writeString(Paths.get(path),
-      s"""{"export_arn": "${t.exportArn}"}""")
+      mapper.writeValueAsString(mapper.createObjectNode().put("export_arn", t.exportArn)))
   }
 
-  def readExportTracker(path: String): ExportTracker = {
-    val s = Files.readString(Paths.get(path))
-    val re = """"export_arn"\s*:\s*"([^"]+)"""".r
-    re.findFirstMatchIn(s) match {
-      case Some(m) => ExportTracker(m.group(1))
-      case None => throw new IllegalArgumentException(s"no export_arn in $path")
-    }
-  }
+  def readExportTracker(path: String): ExportTracker =
+    Some(mapper.readTree(Files.readString(Paths.get(path))).path("export_arn"))
+      .filter(_.isTextual).map(arn => ExportTracker(arn.asText))
+      .getOrElse(throw new IllegalArgumentException(s"no export_arn in $path"))
 }

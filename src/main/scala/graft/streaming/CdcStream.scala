@@ -62,12 +62,7 @@ object CdcStream {
       checkpointDir: String,
       triggerInterval: String = "10 seconds",
       availableNow: Boolean = false): StreamingQuery = {
-    val flat = Merge.filterRemoves(events).drop("eventName")
-      .withColumn("year", substring(col("update_at"), 1, 4))
-      .withColumn("month", substring(col("update_at"), 6, 2))
-      .withColumn("day", substring(col("update_at"), 9, 2))
-      .withColumn("hour", substring(col("update_at"), 12, 2))
-      .withColumn("minute", substring(col("update_at"), 15, 2))
+    val flat = Ingest.withMinuteColumns(Merge.filterRemoves(events).drop("eventName"), "update_at")
     val trig = if (availableNow) Trigger.AvailableNow()
                else Trigger.ProcessingTime(triggerInterval)
     flat.writeStream

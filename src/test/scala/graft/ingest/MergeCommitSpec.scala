@@ -64,9 +64,32 @@ class MergeCommitSpec extends AnyFunSuite {
 
   test("mergeCommit on an empty lake bootstraps via bulk write") {
     val lake = Files.createTempDirectory("graft_lake_empty").resolve("tbl").toString
+    // k1 comes twice: the first delta still gets the in-batch latest-wins
     val delta = lakeRows(Seq(("k1", day(1, 1), "a"), ("k2", day(2, 1), "b")))
+      .union(lakeRows(Seq(("k1", day(1, 1), "a-newer"))).withColumn("update_at", lit(day(9, 0))))
     TableWriter.mergeCommit(spark, delta, lake)
     assert(TableWriter.read(spark, lake).count() === 2)
+    assert(TableWriter.read(spark, lake).filter(col("id") === "k1").head()
+      .getAs[String]("note") === "a-newer")
+  }
+
+  test("a commit keeps the lake columns a narrower delta lacks") {
+    import spark.implicits._
+    val lake = Files.createTempDirectory("graft_lake_narrow").toString
+    val flat = Seq(("acc1", day(1, 1), "shop", 5), ("acc2", day(1, 2), "bank", 7))
+      .toDF("account", "create_at", "entity", "amount")
+      .withColumn("update_at", col("create_at"))
+      .withColumn("is_credit", lit(0)).withColumn("note", lit("n0"))
+    TableWriter.bulkWrite(Ingest.toLakeRows(flat), lake)
+    // the delta updates acc1 in day 1 and carries no entity or amount
+    val delta = Ingest.toLakeRows(flat.filter(col("account") === "acc1"))
+      .drop("entity", "amount")
+      .withColumn("update_at", lit(day(9, 0))).withColumn("note", lit("n1"))
+    TableWriter.mergeCommit(spark, delta, lake)
+    val got = TableWriter.read(spark, lake).select("account", "entity", "amount", "note")
+      .as[(String, String, Option[Int], String)].collect().sortBy(_._1)
+    assert(got.toSeq === Seq(("acc1", null, None, "n1"), ("acc2", "bank", Some(7), "n0")),
+      "a key the delta does not name keeps every lake column of its rewritten partition")
   }
 
   test("mergeCommit into a file: URI lake keeps untouched partitions") {
@@ -169,6 +192,16 @@ class MergeCommitSpec extends AnyFunSuite {
     val after = TableWriter.read(spark, lake)
       .select(before.columns.map(col).toIndexedSeq: _*)
     assert(after.exceptAll(before).isEmpty && before.exceptAll(after).isEmpty)
+  }
+
+  test("compactPartition is one Spark job") {
+    val lake = Files.createTempDirectory("graft_lake_compact_jobs").toString
+    val rows = lakeRows((1 to 12).map(i => (s"k$i", day(1, i), s"v$i")) ++
+      Seq(("x1", day(2, 1), "other-day")))
+    TableWriter.bulkWrite(rows.repartition(4), lake)
+    val jobs = jobsFiredBy(TableWriter.compactPartition(spark, lake, "2024", "01", "01"))
+    assert(jobs === 1, s"compactPartition fired $jobs jobs")
+    assert(TableWriter.read(spark, lake).count() === 13)
   }
 
   test("compactPartition does not duplicate partitions under default type inference") {

@@ -57,6 +57,48 @@ class PersistSpec extends AnyFunSuite {
     assert(stateFromJson(stateToJson(s)) === s)
   }
 
+  test("documents written by the earlier hand-rolled serde still read") {
+    // the exact text the previous stateToJson / jobInputToJson wrote
+    val state =
+      """{"last_processed_partition": "year=2024/month=01/day=01/hour=00/minute=00",
+        | "next_processed_partition": "year=2024/month=01/day=01/hour=01/minute=00",
+        | "last_run_id": "run-9",
+        | "ready_to_run_next": false}""".stripMargin
+    assert(stateFromJson(state) === CdcTracker.State("year=2024/month=01/day=01/hour=00/minute=00",
+      Some("year=2024/month=01/day=01/hour=01/minute=00"), Some("run-9"), readyToRunNext = false))
+    val fresh =
+      """{"last_processed_partition": "year=2024/month=01/day=01/hour=00/minute=00",
+        | "next_processed_partition": null,
+        | "last_run_id": null,
+        | "ready_to_run_next": true}""".stripMargin
+    assert(stateFromJson(fresh) === CdcTracker.State("year=2024/month=01/day=01/hour=00/minute=00",
+      None, None, readyToRunNext = true))
+    // a plain literal, so the escaped tab reaches the parser as an escape
+    val input =
+      "{\"start_after_partition\": \"year=2024/month=01/day=01/hour=00/minute=01\",\n" +
+        " \"end_before_partition\": \"year=2024/month=01/day=01/hour=00/minute=09\",\n" +
+        " \"s3uri_list\": [\"s3://b/p/f1.json\", \"s3://b/p/f \\\"quoted\\\"\\u0009].json\"]}"
+    assert(jobInputFromJson(input) === JobInput("year=2024/month=01/day=01/hour=00/minute=01",
+      "year=2024/month=01/day=01/hour=00/minute=09",
+      Seq("s3://b/p/f1.json", "s3://b/p/f \"quoted\"\t].json")))
+    val empty =
+      """{"start_after_partition": "a",
+        | "end_before_partition": "b",
+        | "s3uri_list": []}""".stripMargin
+    assert(jobInputFromJson(empty) === JobInput("a", "b", Seq.empty))
+    // the defaults and the loud failures
+    assert(stateFromJson("""{"last_processed_partition": "p"}""") ===
+      CdcTracker.State("p", None, None, readyToRunNext = true))
+    assert(jobInputFromJson("""{"start_after_partition": "a", "end_before_partition": "b"}""") ===
+      JobInput("a", "b", Seq.empty))
+    assert(intercept[IllegalArgumentException](stateFromJson("""{"last_run_id": "r"}"""))
+      .getMessage.contains("last_processed_partition"))
+    assert(intercept[IllegalArgumentException](jobInputFromJson("""{"start_after_partition": "a"}"""))
+      .getMessage.contains("end_before_partition"))
+    assert(intercept[IllegalArgumentException](jobInputFromJson("""{"end_before_partition": "b"}"""))
+      .getMessage.contains("start_after_partition"))
+  }
+
   test("a document is replaced by rename, never rewritten in place; a crashed write's temp file changes nothing") {
     val s1 = CdcTracker.State("year=2024/month=01/day=01/hour=00/minute=00", None, Some("run-1"),
       readyToRunNext = true)

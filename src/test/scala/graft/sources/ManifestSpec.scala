@@ -29,6 +29,16 @@ class ManifestSpec extends AnyFunSuite {
     assert(readExportTracker(p) === t)
   }
 
+  test("an export tracker in the earlier hand-rolled writer's text still reads") {
+    val arn = "arn:aws:dynamodb:us-east-1:111122223333:table/Transaction/export/01690000000000-deadbeef"
+    val p = Files.createTempDirectory("graft_manifest_old").resolve("tracker.json")
+    Files.writeString(p, s"""{"export_arn": "$arn"}""")
+    assert(readExportTracker(p.toString) === ExportTracker(arn))
+    Files.writeString(p, """{"export_id": "01690000000000-deadbeef"}""")
+    assert(intercept[IllegalArgumentException](readExportTracker(p.toString))
+      .getMessage.contains("no export_arn"))
+  }
+
   test("readDataFiles rejects invalid keys loudly") {
     val spark = graft.TestSpark.spark
     import spark.implicits._
