@@ -125,26 +125,12 @@ object Queries {
       |substr(create_at, 9, 2) AS create_day, substr(create_at, 12, 2) AS create_hour,
       |substr(create_at, 15, 2) AS create_minute""".stripMargin
 
-  /** Fresh scratch dir for sink round-trip queries (deterministic path,
-    * wiped per run so `append` sinks can't accumulate).
-    *
-    * Base dir: SPARK_GRAFT_SCRATCH if set, else /dev/shm when present
-    * (tmpfs — stream checkpoints and versioned-snapshot sinks fsync
-    * MANY small files per micro-batch, and on a disk-backed /tmp those
-    * fsyncs are the dominant fixed cost of every streaming query),
-    * else java.io.tmpdir. Scratch is wiped per run by definition, so
-    * volatility is fine — production sinks take real durable paths
-    * through the operator APIs, never through here.
+  /** Fresh scratch dir for sink round-trip queries under
+    * [[GraftSession.scratchBase]] (deterministic path, wiped per run so
+    * `append` sinks can't accumulate).
     */
-  private[graft] val scratchBase: String =
-    sys.env.getOrElse("SPARK_GRAFT_SCRATCH", {
-      val shm = Paths.get("/dev/shm")
-      if (Files.isDirectory(shm) && Files.isWritable(shm)) "/dev/shm"
-      else sys.props("java.io.tmpdir")
-    })
-
   private[graft] def scratch(name: String): String = {
-    val p = Paths.get(scratchBase, "graft_q", name)
+    val p = Paths.get(GraftSession.scratchBase, "graft_q", name)
     if (Files.exists(p)) {
       Files.walk(p).sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
     }
@@ -940,10 +926,10 @@ object Queries {
 
     // K11: right-to-be-forgotten purge. The key set names its own
     // partitions (id embeds the immutable create_at), so the purge
-    // rewrites O(touched partitions) with a broadcast anti-join and
-    // never scans the lake to find the keys; fully-emptied partitions
-    // are deleted explicitly (dynamic overwrite can't). Oracle = the
-    // day's re-aggregation excluding the purged accounts.
+    // collects the keys once and rewrites O(touched partitions) with a
+    // filter, never scanning the lake to find them; the commit deletes
+    // a partition the purge empties. Oracle = the day's re-aggregation
+    // excluding the purged accounts.
     "k11_purge_keys" -> Q(
       (s, d) => {
         val day7 = Ingest.toLakeRows(tx(s, d)

@@ -177,18 +177,24 @@ object TableWriter {
       .collect().distinct.toSeq
   }
 
-  /** The one commit every incremental lake write goes through: it reads
-    * the slice of the lake in the day partitions `parts` and writes
-    * `rows(slice)` back by dynamic partition overwrite, which replaces
-    * exactly the partitions the written rows name.
+  /** The one commit every incremental lake write goes through: every
+    * day partition in `parts` ends up holding exactly the rows that
+    * `rows(slice)` gives it, and no other partition changes.
     *
-    * The slice is read with [[Schemas.lakeRow]] (no schema-inference job;
-    * partition columns stay the zero-padded strings, see [[read]]) from
-    * the partition directories of `parts` that exist, under
-    * `basePath = path`. Their names come from Spark's own partition-path
-    * escaping, so a null value finds its `__HIVE_DEFAULT_PARTITION__`
-    * rows. With no such directory, or no lake yet, the slice is empty and
-    * the write creates what it needs.
+    * The slice is the lake's rows in the partitions of `parts`, read with
+    * [[Schemas.lakeRow]] (no schema-inference job; partition columns stay
+    * the zero-padded strings, see [[read]]) from the directories that
+    * exist, under `basePath = path`. Their names come from Spark's own
+    * partition-path escaping, so a null value finds its
+    * `__HIVE_DEFAULT_PARTITION__` rows. With no such directory, or no
+    * lake yet, the slice is empty and the write creates what it needs.
+    *
+    * `rows(slice)` is written by dynamic partition overwrite, which
+    * replaces a partition directory only when rows land in it. So before
+    * the write one existing file of each touched directory is noted; a
+    * directory that still holds it afterwards received no rows, and is
+    * deleted. That costs one listing before the write and one existence
+    * check after it per touched directory, all on the driver.
     *
     * Writing straight from a plan that reads `path` is safe, with no
     * copy of the slice first: dynamic partition overwrite does not
@@ -202,6 +208,7 @@ object TableWriter {
                                (rows: DataFrame => DataFrame): Unit = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dirs = parts.map(partitionDir(path, _)).filter(fs.exists)
+    val marks = dirs.flatMap(d => fs.listStatus(d).find(_.isFile).map(d -> _.getPath))
     val slice =
       if (dirs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), Schemas.lakeRow)
       else spark.read.schema(Schemas.lakeRow).option("basePath", path)
@@ -210,38 +217,40 @@ object TableWriter {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCols: _*)
       .mode("overwrite").parquet(path)
+    marks.foreach { case (dir, mark) => if (fs.exists(mark)) fs.delete(dir, true) }
   }
 
   private def partitionDir(path: String, part: Seq[String]): Path =
     generatePartitionPath(partitionCols.zip(part).toMap, partitionCols, new Path(path))
 
-  /** The O(delta)-cost upsert commit: the latest version per key of the
-    * lake and `delta` ([[graft.merge.Merge.upsert]]) over the days the
-    * delta touches, through [[rewritePartitions]]. The delta is projected
-    * onto [[Schemas.lakeRow]]: a lake column it lacks is null in its own
-    * rows and kept in every other row. A first commit into an absent lake
-    * creates it.
+  /** The O(delta)-cost upsert commit: the latest version per `id` of the
+    * lake and `delta` by `update_at` ([[graft.merge.Merge.upsert]]) over
+    * the days the delta touches, through [[rewritePartitions]]. The delta
+    * is projected onto [[Schemas.lakeRow]]: a lake column it lacks is
+    * null in its own rows and kept in every other row. A first commit
+    * into an absent lake creates it.
     *
     * The lake is partitioned by create_* which derive from `create_at`,
     * an IMMUTABLE component of the record key `id` (initial_load.py:
     * 124-153: id = account + create_at). Hence every existing version of
     * a delta key lives in a partition the delta itself names, and the
     * merge is exact while doing O(touched partitions) work per commit.
+    * The key and version columns are fixed for the same reason: the
+    * argument holds only for a key that embeds `create_at`.
     *
     * A commit is three Spark jobs: [[touchedPartitions]], a shuffle-free
     * pass over the delta that also decides emptiness (an empty delta is a
     * no-op that neither creates nor rewrites anything); the shuffle map
     * stage of the upsert window; and the write.
     */
-  def mergeCommit(spark: SparkSession, delta: DataFrame, path: String,
-                  keyCol: String = "id", versionCol: String = "update_at"): Unit = {
+  def mergeCommit(spark: SparkSession, delta: DataFrame, path: String): Unit = {
     val touched = touchedPartitions(delta)
     if (touched.isEmpty) return
     // upsert projects the delta onto the slice's columns; a delta that
     // carries them all (Ingest.toLakeRows) gets no extra plan node
     val lakeDelta = Schemas.lakeRow.filterNot(f => delta.columns.contains(f.name))
       .foldLeft(delta)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
-    rewritePartitions(spark, path, touched)(Merge.upsert(_, lakeDelta, keyCol, versionCol))
+    rewritePartitions(spark, path, touched)(Merge.upsert(_, lakeDelta))
   }
 
   /** Read the lake with its fixed row schema, [[Schemas.lakeRow]]: one
@@ -273,51 +282,37 @@ object TableWriter {
   /** Small-file compaction for one day partition: every 10 s merge tick
     * adds a few files to each touched day, so a hot partition
     * accumulates many small files over days. Rewrites just that day's
-    * directory into `targetFiles` files through [[rewritePartitions]], in
-    * one Spark job; untouched partitions keep their files. Run on a
-    * compaction cadence (hourly/daily), not per tick.
+    * directory into one file through [[rewritePartitions]], in one Spark
+    * job; untouched partitions keep their files. Run on a compaction
+    * cadence (hourly/daily), not per tick.
     */
   def compactPartition(spark: SparkSession, path: String,
-                       year: String, month: String, day: String,
-                       targetFiles: Int = 1): Unit =
-    rewritePartitions(spark, path, Seq(Seq(year, month, day)))(_.coalesce(targetFiles))
+                       year: String, month: String, day: String): Unit =
+    rewritePartitions(spark, path, Seq(Seq(year, month, day)))(_.coalesce(1))
 
-  /** Right-to-be-forgotten purge: delete every lake row whose `keyCol`
-    * is in `keys`, rewriting ONLY the partitions that can contain those
-    * keys through [[rewritePartitions]]. The record key embeds its
-    * immutable `create_at` (initial_load.py:124-133), so the key set
-    * names its own partitions with no lake read to locate them. Inside
-    * them the survivors are a broadcast anti-join (a purge set is a
-    * user's keys, not a corpus).
-    *
-    * Dynamic partition overwrite cannot remove a partition that ends up
-    * empty, so the partitions the purge empties, found before the write,
-    * are deleted after it.
+  /** Right-to-be-forgotten purge: delete every lake row whose `id` is in
+    * `keys`' `id` column, rewriting ONLY the partitions those keys name
+    * through [[rewritePartitions]], which also deletes a partition the
+    * purge empties. A purge set is one user's keys, so the ids are
+    * collected to the driver once (a null id purges nothing). The record
+    * key embeds its immutable `create_at` (initial_load.py:124-133), so
+    * the ids name their own partitions with no lake read to locate them.
+    * A lake row with a null id is never purged.
     */
-  def purgeKeys(spark: SparkSession, path: String, keys: DataFrame,
-                keyCol: String = "id"): Unit = {
-    val withTs = keys.select(col(keyCol).as("__k"),
-      substring_index(col(keyCol), ",create_at:", -1).as("create_at"))
-    // fail LOUDLY if any key lacks the synthetic-id suffix (custom
-    // keyCol, malformed id): the partitions derived from a bad
-    // extraction hold nothing and the RTBF purge would silently delete
-    // nothing — a silent compliance failure. Purge sets are small (a
-    // user's keys), so this extra pass is cheap.
-    val bad = withTs.filter(!col("create_at").rlike(Schemas.TsRegex)).count()
+  def purgeKeys(spark: SparkSession, path: String, keys: DataFrame): Unit = {
+    import spark.implicits._
+    val ids = keys.select("id").collect().flatMap(r => Option(r.getString(0))).distinct
+    val stamps = ids.map(_.split(",create_at:", -1).last)
+    // fail LOUDLY if any key lacks the synthetic-id suffix: the
+    // partitions derived from a bad extraction hold nothing and the RTBF
+    // purge would silently delete nothing — a silent compliance failure
+    val bad = stamps.count(!_.matches(Schemas.TsRegex))
     require(bad == 0,
       s"purgeKeys: $bad key(s) do not embed a ',create_at:<${Schemas.TsPattern}>' " +
         "suffix; refusing to purge (the derived partitions would be wrong)")
-    val touched = touchedPartitions(Ingest.withPartitionColumns(withTs))
+    val touched = touchedPartitions(Ingest.withPartitionColumns(stamps.toSeq.toDF("create_at")))
     if (touched.isEmpty) return
-    var emptied = Seq.empty[Seq[String]]
-    rewritePartitions(spark, path, touched) { slice =>
-      val kept = slice.join(
-        broadcast(keys.select(col(keyCol).as("__k")).distinct()),
-        slice(keyCol) === col("__k"), "left_anti")
-      emptied = touched.filterNot(touchedPartitions(kept).toSet)
-      kept
-    }
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    emptied.foreach(p => fs.delete(partitionDir(path, p), true))
+    rewritePartitions(spark, path, touched)(
+      _.filter(col("id").isNull || !col("id").isin(ids.toIndexedSeq: _*)))
   }
 }

@@ -1,88 +1,20 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
 
-import graft.merge.Merge
-
-/** Incremental materialized-view maintenance with retractions — the
-  * signed-delta (Z-set) idea of differential dataflow / DBSP
-  * (McSherry et al. CIDR'13; Budiu et al. VLDB'23), specialized to the
-  * keyed upsert streams this lake ingests (reference analog: the
-  * incremental Hudi merge, `incremental_load_orchestration.py` —
-  * which maintains the TABLE incrementally but recomputes every
-  * AGGREGATE from scratch; this operator closes that gap).
-  *
-  * Contract: `maintainAgg(aggPrev, base, delta, …)` produces the
-  * aggregate of the POST-upsert state while touching only
-  * - `aggPrev` — O(groups),
-  * - `delta` — the batch, and
-  * - the base rows of keys named by the delta (an equi-join on the
-  *   key; with the lake's id-embeds-partition layout this is the same
-  *   partition-pruned point lookup the merge itself performs —
-  *   NEVER a full base scan).
-  *
-  * Per changed key: retract the old row's contribution (−1, −amount),
-  * add the winning delta row's (+1, +amount) unless it is a tombstone.
-  * A delta row that LOSES the upsert's total order (version desc,
-  * delete-first, sequence desc — exactly [[Merge.upsertWithTombstones]])
-  * contributes nothing, so replayed/stale events are no-ops and the
-  * maintenance is idempotent per batch. Group rows whose signed count
-  * reaches zero are dropped.
-  *
-  * Amounts ride DECIMAL(18,2): signed sums are then order-insensitive
-  * and exact, so maintained totals are bit-equal to recomputed ones —
-  * the `mv1` gate proves maintain ≡ recompute by hash.
-  *
-  * 100 TB: the view stays fresh at delta cost. One shuffle keyed by
-  * the upsert key (delta ∪ touched-base join), one by the group
-  * (signed combine with aggPrev); the base table and the view are
-  * never rescanned.
+/** The operator library's names for the engine's incremental view
+  * maintenance, [[graft.merge.Materialize]], which holds the contract.
   */
 object Materialize {
 
-  /** The materialized aggregate shape: per-group row count and
-    * decimal-exact amount total (cast to double only for display).
-    */
   def groupAgg(state: DataFrame, groupCol: String, amountCol: String): DataFrame =
-    state.groupBy(col(groupCol))
-      .agg(count(lit(1)).cast("long").as("n_rows"),
-        sum(col(amountCol).cast("decimal(18,2)")).as("total"))
+    graft.merge.Materialize.groupAgg(state, groupCol, amountCol)
 
-  /** Maintain `aggPrev` (= [[groupAgg]] of `base`) across an upsert
-    * batch. `delta` may hold many events per key; it is first reduced
-    * to one winner per key under (version desc, delete-first,
-    * sequence desc). Returns the new aggregate table:
-    * (groupCol, n_rows, total).
-    */
   def maintainAgg(aggPrev: DataFrame, base: DataFrame, delta: DataFrame,
                   isDelete: Column, keyCol: String = "id",
                   versionCol: String = "update_at", seqCol: String = "event_id",
                   groupCol: String = "account",
-                  amountCol: String = "amount"): DataFrame = {
-    val dd = Merge.dedupLatest(delta.withColumn("__del", isDelete.cast("int")),
-      keyCol, versionCol, Seq(col("__del").desc, col(seqCol).desc))
-    val d = dd.select(col(keyCol).as("__k"), col(groupCol).as("__dg"),
-      col(amountCol).cast("decimal(18,2)").as("__damt"), col("__del"),
-      col(versionCol).as("__dv"), col(seqCol).as("__dseq"))
-    // the ONLY touch of base: old rows of delta-named keys (key-pruned)
-    val o = base.select(col(keyCol).as("__k"), col(groupCol).as("__og"),
-      col(amountCol).cast("decimal(18,2)").as("__oamt"),
-      col(versionCol).as("__ov"), col(seqCol).as("__oseq"))
-    val j = d.join(o, Seq("__k"), "left")
-    // delta wins under the upsert's total order; stale rows are no-ops
-    val dWins = col("__ov").isNull || col("__dv") > col("__ov") ||
-      (col("__dv") === col("__ov") &&
-        (col("__del") === 1 || col("__dseq") > col("__oseq")))
-    val retract = j.filter(dWins && col("__ov").isNotNull)
-      .select(col("__og").as(groupCol), lit(-1L).as("dn"),
-        (-col("__oamt")).as("damt"))
-    val insert = j.filter(dWins && col("__del") === 0)
-      .select(col("__dg").as(groupCol), lit(1L).as("dn"), col("__damt").as("damt"))
-    aggPrev.select(col(groupCol), col("n_rows").as("dn"), col("total").as("damt"))
-      .unionByName(retract).unionByName(insert)
-      .groupBy(col(groupCol))
-      .agg(sum(col("dn")).cast("long").as("n_rows"), sum(col("damt")).as("total"))
-      .filter(col("n_rows") > 0)
-  }
+                  amountCol: String = "amount"): DataFrame =
+    graft.merge.Materialize.maintainAgg(aggPrev, base, delta, isDelete, keyCol,
+      versionCol, seqCol, groupCol, amountCol)
 }

@@ -79,16 +79,31 @@ object CdcTracker {
     * maxFiles (orchestration.py:194-225 = P9/O4). `files` are
     * partition-relative paths starting with `year=`; the lexicographic
     * range predicate works because the partition format zero-pads.
+    *
+    * The plan's range is what [[launched]] records and [[completed]]
+    * moves the cursor past, so a cap never leaves a file behind it
+    * (bounded catch-up resumes, T4): when the cap cuts, the range ends
+    * at the minute of the first file left out, and a minute the cap
+    * would split leads the next tick. The one exception to the cap is a
+    * first minute that alone holds more than `maxFiles` files: it is
+    * taken whole, so the cursor always advances.
     */
   def plan(state: State, now: Instant, files: Seq[String],
            maxFiles: Int = 100,
            maxInterval: Duration = Duration.ofDays(365),
            watermark: Duration = Duration.ofMinutes(2)): Option[Plan] =
     nextRange(state, now, maxInterval, watermark).map { case (lo, hi) =>
-      val selected = files.sorted
-        .filter(f => f >= lo && f < hi) // half-open [lo, hi)
-        .take(maxFiles)
-      Plan(lo, hi, selected)
+      val inRange = files.sorted.filter(f => f >= lo && f < hi) // half-open [lo, hi)
+      if (inRange.length <= maxFiles) Plan(lo, hi, inRange)
+      else {
+        def minute(f: String) = f.take(lo.length)
+        val cut = minute(inRange(maxFiles))
+        inRange.take(maxFiles).takeWhile(minute(_) < cut) match {
+          case Seq() => Plan(lo, partitionOf(parsePartition(cut).plus(Duration.ofMinutes(1))),
+            inRange.takeWhile(minute(_) == cut))
+          case whole => Plan(lo, cut, whole)
+        }
+      }
     }
 
   /** Job launched: remember the in-flight range (orchestration.py:240-277). */

@@ -31,7 +31,7 @@ object Persist {
     * document readable plus a stray temp file, which no reader looks at
     * and the next write of the same document does not depend on.
     */
-  private def replaceAtomically(path: String, text: String): Unit = {
+  private[graft] def replaceAtomically(path: String, text: String): Unit = {
     val p = Paths.get(path).toAbsolutePath
     Files.createDirectories(p.getParent)
     val tmp = p.resolveSibling(s".${p.getFileName}.${UUID.randomUUID()}.tmp")

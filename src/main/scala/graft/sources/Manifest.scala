@@ -8,6 +8,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
+import graft.orchestrate.Persist
+
 /** DynamoDB export manifest handling (SURVEY §2.1 S4/S5 + §2.2 P10).
   *
   * The reference parses `manifest-summary.json` (one JSON document) and
@@ -65,11 +67,12 @@ object Manifest {
 
   private val mapper = new ObjectMapper
 
-  def writeExportTracker(t: ExportTracker, path: String): Unit = {
-    Files.createDirectories(Paths.get(path).getParent)
-    Files.writeString(Paths.get(path),
+  /** Replaces the tracker whole ([[Persist.replaceAtomically]]), like
+    * every other driver document: a torn write never shows.
+    */
+  def writeExportTracker(t: ExportTracker, path: String): Unit =
+    Persist.replaceAtomically(path,
       mapper.writeValueAsString(mapper.createObjectNode().put("export_arn", t.exportArn)))
-  }
 
   def readExportTracker(path: String): ExportTracker =
     Some(mapper.readTree(Files.readString(Paths.get(path))).path("export_arn"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.ingest.{Ingest, TableWriter}
-import graft.merge.Merge
+import graft.merge.{Materialize, Merge}
 import graft.model.Schemas
 
 /** Structured Streaming replacement for the reference's whole
@@ -190,7 +190,7 @@ object CdcStream {
       .start().awaitTermination()
   }
 
-  /** Streaming twin of [[graft.ops.Materialize.maintainAgg]]: each
+  /** Streaming twin of [[Materialize.maintainAgg]]: each
     * micro-batch advances BOTH the keyed state table (tombstone upsert)
     * and the aggregate view (signed-delta maintenance) as versioned
     * snapshots (`v=batchId`), the view refreshed at delta cost — the
@@ -231,9 +231,9 @@ object CdcStream {
           if (batchId == 0) initialState
           else s.read.parquet(s"$stateDir/v=${batchId - 1}")
         val prevAgg =
-          if (batchId == 0) graft.ops.Materialize.groupAgg(prevState, groupCol, amountCol)
+          if (batchId == 0) Materialize.groupAgg(prevState, groupCol, amountCol)
           else s.read.parquet(s"$viewDir/v=${batchId - 1}")
-        val newAgg = graft.ops.Materialize.maintainAgg(prevAgg, prevState,
+        val newAgg = Materialize.maintainAgg(prevAgg, prevState,
           batch, isDelete, keyCol, versionCol, seqCol, groupCol, amountCol)
         val newState = Merge.upsertWithTombstones(prevState, batch, isDelete,
           keyCol, versionCol, Seq(col(seqCol).desc))

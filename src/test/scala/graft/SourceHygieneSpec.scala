@@ -30,4 +30,25 @@ class SourceHygieneSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty, s"control bytes found:\n${offenders.mkString("\n")}")
   }
+
+  test("the engine names no operator-library package outside doc comments") {
+    val root = Paths.get("src/main/scala/graft")
+    assume(Files.exists(root), "run from the repo root")
+    val library = Set("ops", "functions").map(root.resolve)
+    val comment = raw"\s*(\*|/\*|//).*".r
+    val offenders = {
+      val s = Files.walk(root)
+      try s.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") && !library.exists(p.startsWith))
+        .flatMap { p =>
+          Files.readAllLines(p).asScala.zipWithIndex.collect {
+            case (line, i) if !comment.matches(line) &&
+              raw"\bgraft\.(ops|functions)\b".r.findFirstIn(line).nonEmpty => s"$p:${i + 1}: ${line.trim}"
+          }
+        }
+        .toVector
+      finally s.close()
+    }
+    assert(offenders.isEmpty, s"engine code reaches into the operator library:\n${offenders.mkString("\n")}")
+  }
 }

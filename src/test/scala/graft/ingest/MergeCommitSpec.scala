@@ -319,6 +319,42 @@ class MergeCommitSpec extends AnyFunSuite {
     assert(err.getMessage.contains("purgeKeys"))
   }
 
+  /** The purge fixture above: acc1 shares day 1, owns day 2 alone; day 3 is acc3's. */
+  private def purgeLake(name: String): (String, DataFrame) = {
+    import spark.implicits._
+    val lake = Files.createTempDirectory(name).toString
+    val rows = Ingest.withPartitionColumns(Ingest.withId(Seq(
+      ("acc1", day(1, 1), "a"), ("acc2", day(1, 2), "b"),
+      ("acc1", day(2, 1), "c"), ("acc3", day(3, 1), "d"))
+      .toDF("account", "create_at", "note")
+      .withColumn("update_at", col("create_at"))))
+    TableWriter.bulkWrite(rows, lake)
+    (lake, rows)
+  }
+
+  test("purgeKeys is at most 2 Spark jobs") {
+    import spark.implicits._
+    val (lake, rows) = purgeLake("graft_purge_jobs")
+    val jobs = jobsFiredBy(TableWriter.purgeKeys(spark, lake,
+      rows.filter(col("account") === "acc1").select("id")))
+    assert(jobs <= 2, s"purgeKeys fired $jobs jobs")
+    assert(TableWriter.read(spark, lake).select("account").as[String].collect().sorted ===
+      Array("acc2", "acc3"))
+  }
+
+  test("a purge keeps a null-id lake row and skips a null key") {
+    import spark.implicits._
+    val (lake, rows) = purgeLake("graft_purge_nulls")
+    // a lake row with no id in day 1, a day the purge rewrites
+    TableWriter.mergeCommit(spark, lakeRows(Seq((null, day(1, 3), "orphan"))), lake)
+    val acc1 = rows.filter(col("account") === "acc1").select("id").as[String].collect().toSeq
+    TableWriter.purgeKeys(spark, lake, (acc1.map(Option(_)) :+ None).toDF("id"))
+    val got = TableWriter.read(spark, lake).select("id", "note").collect()
+      .map(r => Option(r.getString(0)).map(_.takeWhile(_ != ',')) -> r.getString(1)).sortBy(_._2)
+    assert(got.toSeq === Seq(Some("account:acc2") -> "b", Some("account:acc3") -> "d",
+      None -> "orphan"))
+  }
+
   test("writeAuditPublish: failed audit stages but never flips the pointer") {
     import spark.implicits._
     import graft.ops.Profile

@@ -89,4 +89,45 @@ class CdcTrackerSpec extends AnyFunSuite {
     assert(completed(st).readyToRunNext)
     assert(completed(st).lastProcessedPartition === st.lastProcessedPartition)
   }
+
+  /** A catch-up over `minutes` landed minutes of `perMinute` files each,
+    * ticked with `cap` until a plan selects nothing: every plan's files,
+    * in tick order.
+    */
+  private def catchUp(minutes: Int, perMinute: Int, cap: Int): Seq[Seq[String]] = {
+    val st0 = State("year=2024/month=01/day=01/hour=00/minute=00", None, None, true)
+    val landed = for (m <- 1 to minutes; k <- 1 to perMinute) yield
+      f"${partitionOf(parsePartition(st0.lastProcessedPartition).plus(Duration.ofMinutes(m)))}/part-$k%03d.json"
+    val now = Instant.parse("2024-01-02T00:00:00Z")
+    Iterator.iterate((st0, Seq.empty[String])) { case (st, _) =>
+      val p = plan(st, now, Random.shuffle(landed), maxFiles = cap)
+      (p.fold(st)(pl => completed(launched(st, pl, "run"))), p.fold(Seq.empty[String])(_.files))
+    }.drop(1).map(_._2).takeWhile(_.nonEmpty).take(10000).toSeq
+  }
+
+  private def landedCount(ticks: Seq[Seq[String]]) = ticks.flatten.distinct.size
+
+  test("a capped catch-up over one-file minutes merges every file (T4)") {
+    val ticks = catchUp(minutes = 300, perMinute = 1, cap = 100)
+    assert(ticks.flatten.size === 300 && landedCount(ticks) === 300)
+    assert(ticks.map(_.size) === Seq(100, 100, 100))
+  }
+
+  test("a capped catch-up never splits a minute and never drops one (T4)") {
+    for ((perMinute, cap) <- Seq((3, 100), (7, 20))) {
+      val ticks = catchUp(minutes = 300, perMinute = perMinute, cap = cap)
+      assert(ticks.flatten.size === 300 * perMinute, s"($perMinute, $cap) re-merged or dropped files")
+      assert(landedCount(ticks) === 300 * perMinute)
+      assert(ticks.forall(_.size <= cap))
+      // whole minutes only: each tick takes cap / perMinute minutes
+      assert(ticks.init.forall(_.size === cap / perMinute * perMinute))
+    }
+  }
+
+  test("a first minute holding more files than the cap is taken whole") {
+    val ticks = catchUp(minutes = 2, perMinute = 150, cap = 100)
+    assert(ticks.map(_.size) === Seq(150, 150))
+    assert(ticks.head.forall(_.contains("hour=00/minute=01/")))
+    assert(landedCount(ticks) === 300)
+  }
 }

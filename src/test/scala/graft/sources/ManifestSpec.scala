@@ -4,6 +4,8 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 class ManifestSpec extends AnyFunSuite {
   import Manifest._
 
@@ -37,6 +39,23 @@ class ManifestSpec extends AnyFunSuite {
     Files.writeString(p, """{"export_id": "01690000000000-deadbeef"}""")
     assert(intercept[IllegalArgumentException](readExportTracker(p.toString))
       .getMessage.contains("no export_arn"))
+  }
+
+  test("the export tracker is replaced by rename, never rewritten in place") {
+    val arn = "arn:aws:dynamodb:us-east-1:111122223333:table/Transaction/export/"
+    val (t1, t2) = (ExportTracker(arn + "01690000000000-aaaa"), ExportTracker(arn + "01690000000000-bbbb"))
+    val p = Files.createTempDirectory("graft_manifest_swap").resolve("tracker.json")
+    writeExportTracker(t1, p.toString)
+    // a second name for the tracker's current file: rewriting that file
+    // in place (what a crash can tear) would show through it
+    val old = p.resolveSibling("old.json")
+    Files.createLink(old, p)
+    writeExportTracker(t2, p.toString)
+    assert(readExportTracker(p.toString) === t2)
+    assert(readExportTracker(old.toString) === t1, "the tracker was rewritten in place")
+    val ls = Files.list(p.getParent)
+    try assert(ls.iterator().asScala.map(_.getFileName.toString).toSet === Set("tracker.json", "old.json"))
+    finally ls.close()
   }
 
   test("readDataFiles rejects invalid keys loudly") {
