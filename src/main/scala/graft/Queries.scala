@@ -902,7 +902,8 @@ object Queries {
         |GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // K7: small-file compaction — write one day fragmented (6 files),
-    // compact it to one file via the dynamic-overwrite path, and prove
+    // compact it to one file through the lake's partition-rewrite
+    // commit (append the new file, delete the six), and prove
     // the data survived byte-for-byte by re-aggregating against the
     // oracle. The CDC-lake pathology this guards against: every 10 s
     // tick adds files to touched days forever.

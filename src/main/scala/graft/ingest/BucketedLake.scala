@@ -16,7 +16,7 @@ import graft.merge.Merge
   * Trade-offs vs the path-based [[TableWriter]]:
   *  - requires a catalog table (bucket metadata lives in the catalog);
   *  - a commit rewrites the table (saveAsTable Overwrite) rather than
-  *    dynamic partition overwrite — so this layout suits FEWER, BIGGER
+  *    only the touched day partitions — so this layout suits FEWER, BIGGER
   *    merge ticks (hourly compaction), while `TableWriter.mergeCommit`
   *    suits the 10 s CDC loop. Both are exposed; the orchestration
   *    picks per workload.

@@ -10,9 +10,10 @@ import graft.merge.Merge
   * Hudi bucket-index layout). Completes the merge-cost matrix next to
   * the other two writers:
   *
-  *  - [[TableWriter]]  — date-partitioned, dynamic overwrite of touched
-  *    DAYS: right when updates cluster in recent dates; degrades to
-  *    many touched partitions when updates scatter across history.
+  *  - [[TableWriter]]  — date-partitioned, rewrites the touched DAYS
+  *    (appends their new files, then deletes the old): right when
+  *    updates cluster in recent dates; degrades to many touched
+  *    partitions when updates scatter across history.
   *  - [[BucketedLake]] — catalog-bucketed: shuffle-FREE snapshot joins,
   *    but every commit rewrites the table → compaction cadence only.
   *  - `HashBucketLake` — per tick reads AND rewrites only the buckets

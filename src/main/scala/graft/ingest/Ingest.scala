@@ -35,10 +35,16 @@ object Ingest {
     * of inference.
     */
   private[graft] def withMinuteColumns(df: DataFrame, src: String, prefix: String = ""): DataFrame =
-    Seq(("year", 1, 4), ("month", 6, 2), ("day", 9, 2), ("hour", 12, 2), ("minute", 15, 2))
-      .foldLeft(df) { case (d, (name, pos, len)) =>
-        d.withColumn(prefix + name, substring(col(src), pos, len))
-      }
+    minuteFields.foldLeft(df) { case (d, (name, offset, len)) =>
+      d.withColumn(prefix + name, substring(col(src), offset + 1, len))
+    }
+
+  /** `(field, offset, length)` of each minute-column field in the wire
+    * format, offsets 0-based: the one table of where `year` … `minute`
+    * sit in a timestamp string, for columns and driver-side strings.
+    */
+  private[graft] val minuteFields: Seq[(String, Int, Int)] =
+    Seq(("year", 0, 4), ("month", 5, 2), ("day", 8, 2), ("hour", 11, 2), ("minute", 14, 2))
 
   /** Full initial-load transform: flat rows -> 13-column lake rows. */
   def toLakeRows(flat: DataFrame): DataFrame = {
@@ -126,9 +132,10 @@ object Ingest {
 }
 
 /** Idempotent lake writer emulating Hudi COPY_ON_WRITE semantics with
-  * plain Parquet (no Hudi jar in this environment — SURVEY.md §7).
-  * Dynamic partition overwrite rewrites only the partitions present in
-  * the incoming batch, which is what Hudi COW does per commit.
+  * plain Parquet (no Hudi jar in this environment — SURVEY.md §7). As
+  * a Hudi COW commit does, each commit writes new files for the day
+  * partitions it touches beside the old ones and only then removes the
+  * files it read, so a replayed commit is harmless.
   */
 object TableWriter {
   import org.apache.hadoop.fs.Path
@@ -149,13 +156,13 @@ object TableWriter {
       .partitionBy(partitionCols: _*).mode("overwrite").parquet(path)
 
   /** A disjunction of partition-column equalities for the distinct
-    * partitions present in `delta` ([[touchedPartitions]], collected to
-    * the driver: one tuple per touched DAY; a CDC tick caps at 100
-    * minute-files, so a handful of days at most) for a lake scan, where
-    * Catalyst turns it into partition-directory pruning.
+    * partitions present in the lake-row `delta` ([[touchedPartitions]],
+    * collected to the driver: one tuple per touched DAY; a CDC tick caps
+    * at 100 minute-files, so a handful of days at most) for a lake scan,
+    * where Catalyst turns it into partition-directory pruning.
     */
   def touchedPartitionsPredicate(delta: DataFrame): Option[Column] =
-    Some(touchedPartitions(delta)).filter(_.nonEmpty).map(_.map { p =>
+    Some(touchedPartitions(delta)._1).filter(_.nonEmpty).map(_.map { p =>
       partitionCols.zip(p)
         // null-safe <=>: a null partition value (__HIVE_DEFAULT_PARTITION__)
         // must still select its existing versions, or merging silently
@@ -169,12 +176,27 @@ object TableWriter {
     * collected tuples (one per touched day per task). A `distinct()`
     * would plan a shuffle, which AQE runs as two jobs. Empty iff the
     * delta has no rows. A null value stays null.
+    *
+    * The same pass counts the rows whose non-null `create_at` or
+    * `update_at` is not in the wire format ([[Schemas.TsRegex]]): the
+    * day columns are fixed-offset substrings of `create_at`, and
+    * `update_at` orders versions as a string, so either only means what
+    * it says in that format.
     */
-  private def touchedPartitions(delta: DataFrame): Seq[Seq[String]] = {
+  private def touchedPartitions(delta: DataFrame): (Seq[Seq[String]], Long) = {
     val idx = partitionCols.indices
-    delta.select(partitionCols.map(col): _*).rdd
-      .mapPartitions(_.map(r => idx.map(r.getString)).toSet.iterator)
-      .collect().distinct.toSeq
+    val stamps = Seq(idx.length, idx.length + 1)
+    val perTask = delta.select((partitionCols :+ "create_at" :+ "update_at").map(col): _*).rdd
+      .mapPartitions { rows =>
+        val ts = java.util.regex.Pattern.compile(Schemas.TsRegex)
+        var bad = 0L
+        val parts = rows.map { r =>
+          if (stamps.exists(i => !r.isNullAt(i) && !ts.matcher(r.getString(i)).matches)) bad += 1
+          idx.map(r.getString)
+        }.toSet
+        Iterator((parts, bad))
+      }.collect()
+    (perTask.flatMap(_._1).distinct.toSeq, perTask.map(_._2).sum)
   }
 
   /** The one commit every incremental lake write goes through: every
@@ -188,36 +210,34 @@ object TableWriter {
     * partition-path escaping, so a null value finds its
     * `__HIVE_DEFAULT_PARTITION__` rows. With no such directory, or no
     * lake yet, the slice is empty and the write creates what it needs.
+    * Spark lists the directories' visible data files once, when the
+    * slice is defined, and its scan reads exactly that fixed list
+    * (`inputFiles`). Passing the directories rather than the files keeps
+    * that listing on the driver: more than 32 paths
+    * (`spark.sql.sources.parallelPartitionDiscovery.threshold`) would
+    * list in a Spark job.
     *
-    * `rows(slice)` is written by dynamic partition overwrite, which
-    * replaces a partition directory only when rows land in it. So before
-    * the write one existing file of each touched directory is noted; a
-    * directory that still holds it afterwards received no rows, and is
-    * deleted. That costs one listing before the write and one existence
-    * check after it per touched directory, all on the driver.
-    *
-    * Writing straight from a plan that reads `path` is safe, with no
-    * copy of the slice first: dynamic partition overwrite does not
-    * delete partition directories before the job (only static mode
-    * does), task output goes to `path/.spark-staging-<job>`, and the
-    * touched partitions are swapped in only at job commit. By then every
-    * task that reads the slice has finished, and a retried task re-reads
-    * shuffle output or the still-unswapped slice files.
+    * Two steps follow: `rows(slice)` is appended, in new files whose
+    * names are unique to the write job, and then the listed files are
+    * deleted, and every touched directory the deletes leave empty. The
+    * new files are not in the list, so the write can read the slice
+    * while it writes beside it. A crash before the deletes end leaves old
+    * and new files side by side, never a missing day: re-running a merge
+    * then reads both and keeps the latest version of each key, so the
+    * replay is exact.
     */
   private def rewritePartitions(spark: SparkSession, path: String, parts: Seq[Seq[String]])
                                (rows: DataFrame => DataFrame): Unit = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dirs = parts.map(partitionDir(path, _)).filter(fs.exists)
-    val marks = dirs.flatMap(d => fs.listStatus(d).find(_.isFile).map(d -> _.getPath))
     val slice =
       if (dirs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), Schemas.lakeRow)
       else spark.read.schema(Schemas.lakeRow).option("basePath", path)
         .parquet(dirs.map(_.toString): _*)
-    rows(slice).write
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCols: _*)
-      .mode("overwrite").parquet(path)
-    marks.foreach { case (dir, mark) => if (fs.exists(mark)) fs.delete(dir, true) }
+    val files = slice.inputFiles
+    rows(slice).write.partitionBy(partitionCols: _*).mode("append").parquet(path)
+    files.foreach(f => fs.delete(new Path(new java.net.URI(f)), false))
+    dirs.filter(fs.listStatus(_).isEmpty).foreach(fs.delete(_, true))
   }
 
   private def partitionDir(path: String, part: Seq[String]): Path =
@@ -238,18 +258,31 @@ object TableWriter {
     * The key and version columns are fixed for the same reason: the
     * argument holds only for a key that embeds `create_at`.
     *
+    * Latest-wins also makes the commit safe to replay: a merge that
+    * died anywhere in [[rewritePartitions]] and is run again with the
+    * same delta leaves the lake exactly as one clean run would.
+    *
+    * A delta row whose non-null `create_at` or `update_at` is not in the
+    * wire format fails the commit with an `IllegalArgumentException`
+    * before anything is written: its day would be wrong, or its version
+    * would order wrongly. A null `create_at` merges into the
+    * `__HIVE_DEFAULT_PARTITION__` day.
+    *
     * A commit is three Spark jobs: [[touchedPartitions]], a shuffle-free
     * pass over the delta that also decides emptiness (an empty delta is a
-    * no-op that neither creates nor rewrites anything); the shuffle map
-    * stage of the upsert window; and the write.
+    * no-op that neither creates nor rewrites anything) and counts the
+    * malformed timestamps; the shuffle map stage of the upsert window;
+    * and the write.
     */
   def mergeCommit(spark: SparkSession, delta: DataFrame, path: String): Unit = {
-    val touched = touchedPartitions(delta)
-    if (touched.isEmpty) return
     // upsert projects the delta onto the slice's columns; a delta that
     // carries them all (Ingest.toLakeRows) gets no extra plan node
     val lakeDelta = Schemas.lakeRow.filterNot(f => delta.columns.contains(f.name))
       .foldLeft(delta)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
+    val (touched, bad) = touchedPartitions(lakeDelta)
+    require(bad == 0, s"mergeCommit: $bad delta row(s) carry a create_at or update_at outside " +
+      "the wire format yyyy-MM-ddTHH:mm:ss.SSSSSS+0000; refusing to commit")
+    if (touched.isEmpty) return
     rewritePartitions(spark, path, touched)(Merge.upsert(_, lakeDelta))
   }
 
@@ -261,7 +294,7 @@ object TableWriter {
     * The schema also pins the partition columns to their canonical
     * zero-padded STRING form. A session with partition type inference
     * enabled (the Spark default; GraftSession disables it) would read
-    * `create_day=08` back as int 8 — and a subsequent dynamic-overwrite
+    * `create_day=08` back as int 8 — and a subsequent partitioned
     * write would then create `create_day=8` BESIDE the existing
     * `create_day=08`, silently duplicating the partition's rows on read
     * (both dirs parse to the same logical value). This read and
@@ -296,11 +329,11 @@ object TableWriter {
     * purge empties. A purge set is one user's keys, so the ids are
     * collected to the driver once (a null id purges nothing). The record
     * key embeds its immutable `create_at` (initial_load.py:124-133), so
-    * the ids name their own partitions with no lake read to locate them.
-    * A lake row with a null id is never purged.
+    * the ids name their own partitions, cut from the timestamps on the
+    * driver with no Spark job and no lake read to locate them. A lake row
+    * with a null id is never purged.
     */
   def purgeKeys(spark: SparkSession, path: String, keys: DataFrame): Unit = {
-    import spark.implicits._
     val ids = keys.select("id").collect().flatMap(r => Option(r.getString(0))).distinct
     val stamps = ids.map(_.split(",create_at:", -1).last)
     // fail LOUDLY if any key lacks the synthetic-id suffix: the
@@ -310,7 +343,9 @@ object TableWriter {
     require(bad == 0,
       s"purgeKeys: $bad key(s) do not embed a ',create_at:<${Schemas.TsPattern}>' " +
         "suffix; refusing to purge (the derived partitions would be wrong)")
-    val touched = touchedPartitions(Ingest.withPartitionColumns(stamps.toSeq.toDF("create_at")))
+    // the day columns are the leading minute fields of create_at
+    val touched = stamps.toSeq.map(ts => Ingest.minuteFields.take(partitionCols.length)
+      .map { case (_, offset, len) => ts.substring(offset, offset + len) }).distinct
     if (touched.isEmpty) return
     rewritePartitions(spark, path, touched)(
       _.filter(col("id").isNull || !col("id").isin(ids.toIndexedSeq: _*)))

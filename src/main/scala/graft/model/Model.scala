@@ -39,9 +39,12 @@ object Schemas {
   val TsPattern = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSZ"
 
   /** [[TsPattern]] as a whole-string regex, for checks that must not
-    * parse: 6 fractional digits and a signed 4-digit offset.
+    * parse: 6 fractional digits and the `+0000` offset. The offset is
+    * pinned because the day partitions are cut from the string as
+    * written, and versions compare as strings: another offset would file
+    * a row under its local day and order it wrongly.
     */
-  val TsRegex = "^\\d{4}-\\d{2}-\\d{2}T\\d{2}:\\d{2}:\\d{2}\\.\\d{6}[+-]\\d{4}$"
+  val TsRegex = "^\\d{4}-\\d{2}-\\d{2}T\\d{2}:\\d{2}:\\d{2}\\.\\d{6}\\+0000$"
 
   private def s(name: String) =
     StructField(name, StructType(Seq(StructField("S", StringType))))

@@ -113,10 +113,11 @@ object CdcTracker {
       lastRunId = Some(runId),
       readyToRunNext = false)
 
-  /** Job reached a terminal state: advance the cursor
-    * (orchestration.py:286-330 = T5). Advancing on ANY terminal state
-    * (even failure) matches the reference; replay safety comes from the
-    * merge's latest-wins idempotency (T8), not from the tracker.
+  /** Job succeeded: advance the cursor past the launched range
+    * (orchestration.py:286-330 = T5). A tick with nothing to launch
+    * completes too, leaving the cursor where it is. A failed job goes
+    * through [[failed]] instead: the reference advances on any terminal
+    * state, which skips a failed range for good.
     */
   def completed(state: State): State =
     state.nextProcessedPartition match {
@@ -126,4 +127,12 @@ object CdcTracker {
         None, state.lastRunId, readyToRunNext = true)
       case None => state.copy(readyToRunNext = true)
     }
+
+  /** Job failed: keep the cursor, drop the in-flight range and allow the
+    * next tick, whose [[plan]] then covers the failed range again. The
+    * retry is exact because a merge commit replays exact (latest-wins,
+    * T8), whatever point the failed one died at.
+    */
+  def failed(state: State): State =
+    state.copy(nextProcessedPartition = None, readyToRunNext = true)
 }

@@ -139,6 +139,24 @@ class MergeCommitSpec extends AnyFunSuite {
     assert(emptyJobs <= 1, s"mergeCommit of an empty delta fired $emptyJobs jobs")
   }
 
+  test("mergeCommit refuses a timestamp outside the +0000 wire format and writes nothing") {
+    val lake = Files.createTempDirectory("graft_lake_badts")
+    TableWriter.bulkWrite(lakeRows(Seq(("k1", day(1, 1), "a"), ("k2", day(2, 1), "b"))),
+      lake.toString)
+    val before = filesOf(lake)
+    // 00:30 at +0100 is 23:30 of the day before in UTC: cut from the
+    // string, it would land in day 2
+    val offset = lakeRows(Seq(("k3", "2024-01-02T00:30:00.000000+0100", "c")))
+    // a 3-digit fraction orders wrongly against the 6-digit versions
+    val millis = lakeRows(Seq(("k1", day(1, 1), "a2")))
+      .withColumn("update_at", lit("2024-01-09T00:00:00.000+0000"))
+    for (delta <- Seq(offset, millis)) {
+      val err = intercept[IllegalArgumentException](TableWriter.mergeCommit(spark, delta, lake.toString))
+      assert(err.getMessage.contains("mergeCommit: 1 delta row"), err.getMessage)
+      assert(filesOf(lake) === before, "a refused commit must leave every lake file as it was")
+    }
+  }
+
   test("a null partition value merges into its __HIVE_DEFAULT_PARTITION__ rows") {
     val lake = Files.createTempDirectory("graft_lake_nullpart").toString
     TableWriter.bulkWrite(lakeRows(Seq(
@@ -202,6 +220,16 @@ class MergeCommitSpec extends AnyFunSuite {
     val jobs = jobsFiredBy(TableWriter.compactPartition(spark, lake, "2024", "01", "01"))
     assert(jobs === 1, s"compactPartition fired $jobs jobs")
     assert(TableWriter.read(spark, lake).count() === 13)
+  }
+
+  test("compactPartition of a day holding more than 32 files is one Spark job") {
+    // the slice's files are listed on the driver whatever their number
+    val lake = Files.createTempDirectory("graft_lake_compact_many").toString
+    TableWriter.bulkWrite(lakeRows((1 to 200).map(i => (s"k$i", day(1, i % 60), s"v$i"))).repartition(40), lake)
+    assert(filesOf(Paths.get(lake)).keys.count(_.endsWith(".parquet")) > 32, "fixture must hold > 32 files")
+    val jobs = jobsFiredBy(TableWriter.compactPartition(spark, lake, "2024", "01", "01"))
+    assert(jobs === 1, s"compactPartition fired $jobs jobs")
+    assert(TableWriter.read(spark, lake).count() === 200)
   }
 
   test("compactPartition does not duplicate partitions under default type inference") {
@@ -338,6 +366,16 @@ class MergeCommitSpec extends AnyFunSuite {
     val jobs = jobsFiredBy(TableWriter.purgeKeys(spark, lake,
       rows.filter(col("account") === "acc1").select("id")))
     assert(jobs <= 2, s"purgeKeys fired $jobs jobs")
+    assert(TableWriter.read(spark, lake).select("account").as[String].collect().sorted ===
+      Array("acc2", "acc3"))
+  }
+
+  test("a purge of driver-local keys is one Spark job") {
+    import spark.implicits._
+    val (lake, rows) = purgeLake("graft_purge_one_job")
+    val jobs = jobsFiredBy(TableWriter.purgeKeys(spark, lake,
+      rows.filter(col("account") === "acc1").select("id")))
+    assert(jobs === 1, s"purgeKeys fired $jobs jobs")
     assert(TableWriter.read(spark, lake).select("account").as[String].collect().sorted ===
       Array("acc2", "acc3"))
   }

@@ -84,6 +84,17 @@ class CdcTrackerSpec extends AnyFunSuite {
     assert(done.nextProcessedPartition === None)
   }
 
+  test("after a failed tick the next plan is the failed one") {
+    val st = State("year=2024/month=01/day=01/hour=00/minute=00", None, Some("run-0"), true)
+    val now = Instant.parse("2024-01-01T01:00:00Z")
+    val files = Seq("year=2024/month=01/day=01/hour=00/minute=05/f.json",
+      "year=2024/month=01/day=01/hour=00/minute=07/g.json")
+    val Some(p) = plan(st, now, files, maxInterval = Duration.ofMinutes(6)): @unchecked
+    val retry = failed(launched(st, p, "run-1"))
+    assert(retry === State(st.lastProcessedPartition, None, Some("run-1"), readyToRunNext = true))
+    assert(plan(retry, now, files, maxInterval = Duration.ofMinutes(6)) === Some(p))
+  }
+
   test("empty-plan tick leaves cursor unchanged via completed on idle state") {
     val st = State("year=2024/month=01/day=01/hour=00/minute=00", None, None, false)
     assert(completed(st).readyToRunNext)
